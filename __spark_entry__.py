@@ -2235,8 +2235,8 @@ PERCOLATE_QUERIES = [
 
 
 def q_percolate(spark, sf):
-    """Term-partitioned percolation (Monitor query-index pre-filter): the
-    plan is one equi-join on term + one aggregation, no cross product."""
+    """Flat percolation (Monitor query-index pre-filter): distinct stored
+    shapes matched as banked bitmask tests against per-doc term masks."""
     from lucene_spark.streaming import percolate_prefiltered
 
     qdf = spark.createDataFrame(PERCOLATE_QUERIES, "qid int, terms array<string>, min_match int")
@@ -2251,8 +2251,9 @@ PERCOLATE_FULL_QUERIES = [
 
 
 def q_percolate_full(spark, sf):
-    """Full-shape percolation (min_match + NOT + exact phrase): every
-    constraint a shuffle join; the phrase uses the position-anchor trick."""
+    """Full-shape percolation (min_match + NOT + exact phrase): one clause
+    shape per stored query in the percolator's bitmask core; the phrase is
+    a per-doc substring flag (the position-anchor leg past 32 phrases)."""
     from lucene_spark.streaming import percolate_full
 
     qdf = spark.createDataFrame(
@@ -2274,9 +2275,9 @@ PERCOLATE_TREE_QUERIES = [
 def q_percolate_tree(spark, sf):
     """Arbitrary-query percolation (QueryDecomposer.java:33 analog):
     stored queries are STRINGS in the engine's syntax — nested booleans,
-    NOT, exact phrases, prefix/wildcard — decomposed to DNF clauses and
-    evaluated via the shuffle-join legs of percolate_full (patterns
-    expand against the batch vocabulary first)."""
+    NOT, exact phrases, prefix/wildcard — decomposed to DNF clauses whose
+    distinct shapes match in the percolator's bitmask core (terms, NOT
+    terms, patterns and phrases are bits of a per-doc mask)."""
     from lucene_spark.streaming import percolate_tree
 
     return percolate_tree(_docs(spark, sf), PERCOLATE_TREE_QUERIES).orderBy(
@@ -2297,7 +2298,7 @@ def q_percolate_verify(spark, sf):
     (VERDICT r5 missing#5 — monitor/CandidateMatcher.java verify analog):
     sloppy 2-term phrases (position band-join verify after the terms-leg
     prefilter), fuzzy terms (batch-vocab Damerau expansion), and term
-    ranges (in-range vocab join)."""
+    ranges (in-range flags of the percolator's doc masks)."""
     from lucene_spark.streaming import percolate_tree
 
     return percolate_tree(_docs(spark, sf), PERCOLATE_VERIFY_QUERIES).orderBy(

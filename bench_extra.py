@@ -5,6 +5,7 @@ file holds the extra instrumentation the optimization round needs):
   python bench_extra.py explains <outdir> [sf_dir]   # .explain("formatted") dumps
   python bench_extra.py percolate [sf_dir]           # isolated percolate timings
   python bench_extra.py micro [sf_dir]               # per-query noop-sink timings
+  python bench_extra.py percolate-plans <outdir> <tag> # ingest-shaped percolate plans
 
 Timings here isolate single operators (guide §1.4: noop sink / count forced
 outside the sink cost) and label jobs (guide §1.5) so the Spark UI maps
@@ -208,6 +209,70 @@ def cmd_explains(outdir: str, sf_dir: str) -> None:
     spark.stop()
 
 
+def cmd_percolate_plans(outdir: str, tag: str) -> None:
+    """Executed plans of percolate_tree / percolate_prefiltered /
+    percolate_full on one registry shaped like perfbench's ``ingest``
+    workload (perfbench/gen.py, seed 1: 2000 tree + 2000 flat stored
+    queries over more than 4096 distinct terms, one 500-doc batch). Each
+    entry runs twice and the second (warm) run is dumped after it
+    executes, so the dump is AQE's final plan; the header records that
+    run's Spark jobs and wall time. Writes percolate_<entry>_<tag>.txt
+    under ``outdir``."""
+    import contextlib
+    import io
+    import tempfile
+
+    import pyarrow.parquet as pq
+
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "perfbench"))
+    import gen
+    from lucene_spark import streaming
+
+    spark = _spark()
+    sc = spark.sparkContext
+    vocab = gen.make_vocab(1, 12_000)
+    corpus = gen.make_corpus(vocab, 1, 0, 2_000)
+    tc = gen.term_classes(vocab, corpus.doc_freq(len(vocab.words)), 2_000)
+    reg = gen.registry(1, tc, vocab.words, 2_000, 2_000)
+    batch = gen.make_corpus(vocab, 1, 2, 500, first_doc_id=2_000)
+    path = os.path.join(tempfile.mkdtemp(prefix="percolate_plans_"), "batch.parquet")
+    pq.write_table(batch.table(vocab), path)
+    docs = spark.read.parquet(path).withColumnRenamed("content", "text")
+    flat_df = spark.createDataFrame(reg.flat, "qid int, terms array<string>, min_match int")
+    full_df = spark.createDataFrame(
+        [(q, terms, m, [d] if d else [], [])
+         for (q, terms, m), (_a, _b, _c, d) in zip(reg.flat, reg.tree_terms)],
+        "qid int, terms array<string>, min_match int, "
+        "not_terms array<string>, phrase array<string>",
+    )
+    n_terms = len({t for _q, ts, _m in reg.flat for t in ts}
+                  | {t for ts in reg.tree_terms for t in ts if t})
+    os.makedirs(outdir, exist_ok=True)
+    for name, run in (
+        ("tree", lambda: streaming.percolate_tree(docs, reg.tree)),
+        ("prefiltered", lambda: streaming.percolate_prefiltered(docs, flat_df)),
+        ("full", lambda: streaming.percolate_full(docs, full_df)),
+    ):
+        for rep in range(2):
+            group = f"percolate-plans-{name}-{rep}"
+            sc.setJobGroup(group, group)
+            t0 = time.perf_counter()
+            df = run()
+            n = len(df.collect())
+            wall = time.perf_counter() - t0
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        with open(os.path.join(outdir, f"percolate_{name}_{tag}.txt"), "w") as f:
+            f.write(f"# percolate_{name} ({tag}): ingest-shaped registry, "
+                    f"{n_terms} distinct terms, 500 docs\n"
+                    f"# rows={n} spark_jobs={jobs} wall_s={wall:.2f} (second run)\n\n")
+            f.write(buf.getvalue())
+        print(f"percolate_{name}_{tag}: rows={n} jobs={jobs} wall={wall:.2f}s")
+    spark.stop()
+
+
 def cmd_ratio10m() -> None:
     """Decode-ratio rows at a 10M-doc skip index (VERDICT r6 next-round
     #9): same deterministic term-pick recipe as bench.py's 1M section,
@@ -309,6 +374,8 @@ if __name__ == "__main__":
         cmd_micro(sf)
     elif cmd == "ratio10m":
         cmd_ratio10m()
+    elif cmd == "percolate-plans":
+        cmd_percolate_plans(sys.argv[2], sys.argv[3])
     elif cmd == "explains":
         outdir = sys.argv[2] if len(sys.argv) > 2 else "plans/r07"
         cmd_explains(outdir, sf)

@@ -524,11 +524,16 @@ def apply_per_segment(index: Index, rows: DataFrame, fn, schema: str) -> DataFra
     cogrouped in when deletes exist — the per-segment liveDocs shape
     (PendingDeletes.java:31): every task sees only its segment's delete set,
     nothing is materialized on the driver or captured in closures.
+    Tombstones of segments with no ``rows`` are dropped first: such a
+    segment contributes nothing, and a cogroup whose postings side is
+    empty crashes the Python worker decoding it.
     ``fn(key, postings_pdf, deleted_or_None) -> pdf``."""
     if index.has_deletes:
+        segs = F.broadcast(rows.select("segment_id").distinct())
+        tomb = index.tombstones.join(segs, "segment_id", "left_semi")
         return (
             rows.groupBy("segment_id")
-            .cogroup(index.tombstones.groupBy("segment_id"))
+            .cogroup(tomb.groupBy("segment_id"))
             .applyInPandas(lambda key, pdf, tomb: fn(key, pdf, _tomb_arr(tomb)), schema)
         )
     return rows.groupBy("segment_id").applyInPandas(

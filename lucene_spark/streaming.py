@@ -1,16 +1,20 @@
 """Streaming analogs of Lucene's incremental machinery (SURVEY.md §2.9).
 
-Two pieces are genuinely streaming-shaped:
-
   Monitor (percolator)  [lucene/monitor/src/java/org/apache/lucene/monitor/Monitor.java:42]
-      reverse search: stored queries matched against a document stream.
-      -> Structured Streaming stream-static join: stream of docs joined
-         against a small static query-term table.
+      reverse search: stored queries matched against each incoming batch
+      of documents. Flat min-match term sets (percolate_prefiltered), full
+      shapes with NOT terms and a phrase (percolate_full) and arbitrary
+      query strings decomposed to DNF clauses (percolate_tree) all lower to
+      DISTINCT clause shapes matched by one core (_tree_match_core): a
+      per-doc presence bitmask over every stored term and constraint,
+      tested against the broadcast shape table's banked (word, mask)
+      pairs. percolate_batch / percolate_stream stay the append-mode
+      stream-static form (no aggregation, so no watermark needed).
 
   NRT refresh / SearcherManager  [index/DirectoryReader.java:241-278]
-      -> foreachBatch incremental index append: each micro-batch builds new
-         segments into the same index dir (manifest grows; readers see the
-         new snapshot on next open).
+      -> index.builder.append_to_index from foreachBatch: each micro-batch
+         builds new segments into the same index dir (manifest grows;
+         readers see the new snapshot on next open).
 """
 
 from __future__ import annotations
@@ -20,120 +24,108 @@ import json
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .pipeline.textstats import tokens
+from .session import spread_small
 
-# --- caps for the bitmask fast path (r7). The mask plan evaluates every
-# (doc, distinct-clause-shape) pair with a broadcast nested-loop join over
-# per-doc presence bitmasks — no shuffled join legs at all — so it is only
-# deployed when the broadcast side and the mask width are provably small;
-# anything larger falls back to the proven equi-join legs (which scale in
-# Σ df rather than docs × shapes).
-_MASK_MAX_TERMS = 4096      # distinct stored-query terms covered by the mask
-_MASK_INLINE_TERMS = 62     # single-long inline mask: zero extra shuffles
-_MASK_MAX_SETS = 8192       # distinct clause shapes broadcast to every task
-_MASK_MAX_EXISTS = 32       # inline exists() constraints (patterns/ranges)
+_MASK_INLINE_TERMS = 62     # term bits set by one inline expression, no shuffle
+_MASK_MAX_EXISTS = 32       # distinct patterns / ranges / phrases checked inline
 # stored-query table small enough to dedup on the driver (one collect
 # replaces the 3-shuffle Spark-side dedup; ~100 B/row of driver memory)
 _DRIVER_DEDUP_QUERIES = 100_000
 
-# int64 bit values; bit 63 as the negative two's-complement literal so the
-# python int always fits a Spark LongType
-_POW2 = [1 << i for i in range(63)] + [-(1 << 63)]
 
-
-def _spread(docs: DataFrame) -> DataFrame:
-    """See session.spread_small: the percolator's mask plan does all its
-    work in the scan stage (mask + constraint expressions + broadcast
-    crossJoin) — observed 3 tasks on 32 cores at sf1.0 before this."""
-    from .session import spread_small
-
-    return spread_small(docs)
-
-
-def _doc_masks(docs: DataFrame, text_col: str, iv, keep_cols=()) -> DataFrame:
-    """(doc_id, *keep_cols, __mask__ array<long>) — per-doc presence bitmask
-    over the interesting vocabulary ``iv`` (sorted distinct stored-query
-    terms). |iv| <= 62: one inline expression, no shuffle; larger: explode +
-    broadcast-join + bit-fold, one narrow (doc_id, bit) shuffle. Project
-    early: the text column never leaves this function (guide §2.3)."""
-    docs = _spread(docs)
+def _doc_masks(docs: DataFrame, text_col: str, iv, n_words: int,
+               flags, expand) -> DataFrame:
+    """(doc_id, __mask__ array<long>) — per-doc presence bitmask of
+    ``n_words`` words. Bit j < |iv| is the stored term iv[j]; ``flags`` are
+    (bit, per-doc boolean Column) inline constraints; ``expand`` are
+    (term, bit) DataFrames of constraints expanded against the batch
+    vocabulary. |iv| <= 62 with nothing to expand: one inline expression,
+    no shuffle; otherwise explode + broadcast-join + one (doc_id) group,
+    its shuffle sized to the session's parallelism (an explicit count AQE
+    leaves alone, so the crossJoin downstream keeps every core busy).
+    Project early: the text column never leaves this function."""
     toks_d = F.array_distinct(tokens(text_col))
-    n_words = max(1, (len(iv) + 63) // 64)
-    if len(iv) <= _MASK_INLINE_TERMS:
+    flag_bits = F.array_compact(
+        F.array(*[F.when(c, F.lit(b)) for b, c in flags]).cast("array<int>")
+    )
+    if len(iv) <= _MASK_INLINE_TERMS and not expand:
         def bitof(t):
-            c = F.when(t == iv[0], F.lit(_POW2[0]).cast("long"))
+            c = F.when(t == iv[0], F.lit(0))
             for j, w in enumerate(iv[1:], 1):
-                c = c.when(t == w, F.lit(_POW2[j]).cast("long"))
-            return c.otherwise(F.lit(0).cast("long"))
+                c = c.when(t == w, F.lit(j))
+            return c
 
-        hits = F.array_intersect(toks_d, F.array(*[F.lit(t) for t in iv]))
-        mask = F.aggregate(hits, F.lit(0).cast("long"),
-                           lambda acc, t: acc.bitwiseOR(bitof(t)))
-        return docs.select("doc_id", *keep_cols, F.array(mask).alias("__mask__"))
+        bits = F.array().cast("array<int>")
+        if iv:
+            bits = F.transform(F.array_intersect(toks_d, F.array(*map(F.lit, iv))), bitof)
+        return spread_small(docs).select(
+            "doc_id", _fold_words(F.concat(bits, flag_bits), n_words).alias("__mask__")
+        )
 
     spark = docs.sparkSession
-    iv_df = spark.createDataFrame(
-        [(t, j) for j, t in enumerate(iv)], "term string, bit int"
+    term_bits = _local_df(
+        spark, list(zip(iv, range(len(iv)))), "term string, bit int"
     )
-    base = docs.select("doc_id", *keep_cols, toks_d.alias("__toksd__"))
-    dterms = base.select("doc_id", F.explode("__toksd__").alias("term"))
-    bits = (
-        dterms.join(F.broadcast(iv_df), "term")
+    for e in expand:
+        term_bits = term_bits.unionByName(e)
+    bits = F.array_union(F.collect_set("bit"), F.first("__fl__"))
+    return (
+        docs.select("doc_id", F.explode_outer(toks_d).alias("term"),
+                    flag_bits.alias("__fl__"))
+        .join(F.broadcast(term_bits), "term", "left")
+        .select("doc_id", "bit", "__fl__")
+        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .groupBy("doc_id")
-        .agg(F.collect_set("bit").alias("__bits__"))
+        .agg(_fold_words(bits, n_words).alias("__mask__"))
     )
-    pow2 = F.array(*[F.lit(v).cast("long") for v in _POW2])
+
+
+def _fold_words(bits, n_words: int):
+    """Dense int64 word array with every bit index in ``bits`` set."""
+    one = F.lit(1).cast("long")
     zero = F.array_repeat(F.lit(0).cast("long"), n_words)
-    mask = F.aggregate(
-        F.coalesce(F.col("__bits__"), F.array().cast("array<int>")),
-        zero,
+    return F.aggregate(
+        bits, zero,
         lambda acc, b: F.transform(
             acc,
             lambda x, i: F.when(
-                i == F.floor(b / 64).cast("int"),
-                x.bitwiseOR(F.get(pow2, b % 64)),
+                i == F.shiftright(b, 6),
+                x.bitwiseOR(F.call_function("shiftleft", one, b.bitwiseAND(63))),
             ).otherwise(x),
         ),
     )
-    return (
-        base.join(bits, "doc_id", "left")
-        .withColumn("__mask__", mask)
-        .drop("__toksd__", "__bits__")
-    )
 
 
-def _covers(dm, sm, n_words):
-    """Every bit of set-mask ``sm`` present in doc-mask ``dm``."""
-    c = None
-    for i in range(n_words):
-        ci = dm.getItem(i).bitwiseAND(sm.getItem(i)) == sm.getItem(i)
-        c = ci if c is None else (c & ci)
-    return c
+def _banks(bit_sets):
+    """Per shape, the (word index, word mask) pairs of the doc-mask words
+    its bits touch, padded with (0, 0) to the largest count K. Returns
+    (K, [(words, masks)]) with masks wrapped to signed int64."""
+    per = []
+    for bits in bit_sets:
+        words: dict = {}
+        for b in bits:
+            words[b // 64] = words.get(b // 64, 0) | (1 << (b % 64))
+        per.append(sorted(words.items()))
+    k = max((len(p) for p in per), default=0)
+    out = []
+    for p in per:
+        p = p + [(0, 0)] * (k - len(p))
+        out.append(([w for w, _ in p],
+                    [m - (1 << 64) if m >= (1 << 63) else m for _, m in p]))
+    return k, out
 
 
-def _disjoint(dm, sm, n_words):
-    c = None
-    for i in range(n_words):
-        ci = dm.getItem(i).bitwiseAND(sm.getItem(i)) == F.lit(0).cast("long")
-        c = ci if c is None else (c & ci)
-    return c
-
-
-def _popcount_and(dm, sm, n_words):
-    s = None
-    for i in range(n_words):
-        si = F.bit_count(dm.getItem(i).bitwiseAND(sm.getItem(i)))
-        s = si if s is None else (s + si)
+def _bank_count(words: str, masks: str, k: int):
+    """Σₖ bit_count(doc[words[k]] & masks[k]): how many of a shape's bits
+    the doc mask holds. Unrolled over the K banks — Spark runs
+    higher-order functions interpreted, this stays in generated code."""
+    dm = F.col("__mask__")
+    s = F.lit(0)
+    for i in range(k):
+        s = s + F.bit_count(
+            F.get(dm, F.col(words)[i]).bitwiseAND(F.col(masks)[i])
+        )
     return s
-
-
-def _mask_words(terms, bit_of, n_words):
-    """Python-side mask words for one clause's term set."""
-    words = [0] * n_words
-    for t in terms:
-        b = bit_of[t]
-        words[b // 64] |= 1 << (b % 64)
-    # wrap to signed int64 for Spark LongType
-    return [w - (1 << 64) if w >= (1 << 63) else w for w in words]
 
 
 def percolate_batch(docs: DataFrame, queries: DataFrame, text_col: str = "text") -> DataFrame:
@@ -166,7 +158,7 @@ def percolate_batch(docs: DataFrame, queries: DataFrame, text_col: str = "text")
             queries.select("qid", "terms", "min_match"), ["terms", "min_match"]
         )
         uniq = F.broadcast(u)
-    toked = _spread(docs).withColumn("__toks__", F.array_distinct(tokens(text_col)))
+    toked = spread_small(docs).withColumn("__toks__", F.array_distinct(tokens(text_col)))
     j = toked.crossJoin(uniq)
     matches = (
         j.withColumn("n_matched", F.size(F.array_intersect("__toks__", "terms")).cast("long"))
@@ -205,7 +197,8 @@ def _driver_dedup(queries: DataFrame, shape_cols):
     for r in rows:
         groups.setdefault(keyof(r), []).append(int(r["qid"]))
     uniq_rows = [(min(qids), k) for k, qids in groups.items()]
-    mapping_df = queries.sparkSession.createDataFrame(
+    mapping_df = _local_df(
+        queries.sparkSession,
         [(min(qids), q) for qids in groups.values() for q in qids],
         "__rep__ int, qid int",
     )
@@ -216,10 +209,10 @@ def _dedup_stored(queries: DataFrame, shape_cols):
     """Collapse duplicate stored-query SHAPES to one representative qid
     (Monitor QueryIndex analog — the reference indexes each distinct query
     once and fans matches back out): alerting workloads repeat shapes
-    massively, and every join leg downstream scales in Σ df(term) over
-    stored-query ROWS. Returns (uniq, mapping): uniq holds one row per
-    distinct shape under its min-qid representative; mapping (__rep__, qid)
-    restores per-qid results — identical shapes match identical docs."""
+    massively, and the broadcast shape table scales in distinct shapes.
+    Returns (uniq, mapping): uniq holds one row per distinct shape under
+    its min-qid representative; mapping (__rep__, qid) restores per-qid
+    results — identical shapes match identical docs."""
     skey = F.sha2(F.to_json(F.struct(*[F.col(c) for c in shape_cols])), 256)
     qk = queries.withColumn("__skey__", skey)
     rep = qk.groupBy("__skey__").agg(F.min("qid").alias("__rep__"))
@@ -239,22 +232,6 @@ def _fan_out(matches: DataFrame, mapping: DataFrame, extra=()) -> DataFrame:
     )
 
 
-def _prefilter_body(docs: DataFrame, queries: DataFrame, text_col: str) -> DataFrame:
-    dterms = docs.select(
-        "doc_id", F.explode(F.array_distinct(tokens(text_col))).alias("term")
-    )
-    qterms = queries.select(
-        "qid", "min_match", F.explode(F.array_distinct("terms")).alias("term")
-    )
-    return (
-        dterms.join(qterms, "term")
-        .groupBy("qid", "doc_id", "min_match")
-        .agg(F.count("*").alias("n_matched"))
-        .filter(F.col("n_matched") >= F.col("min_match"))
-        .select("qid", "doc_id", "n_matched")
-    )
-
-
 def _collect_small(df: DataFrame, cap: int):
     """Collect up to ``cap`` rows; None when the frame is larger (the
     caller falls back to the fully distributed plan)."""
@@ -262,141 +239,61 @@ def _collect_small(df: DataFrame, cap: int):
     return None if len(rows) > cap else rows
 
 
-def percolate_prefiltered(docs: DataFrame, queries: DataFrame, text_col: str = "text") -> DataFrame:
-    """Term-partitioned percolation for large stored-query sets — the
-    Monitor's query-index pre-filter (monitor/Monitor.java:42,
-    CandidateMatcher.java): a (doc, query) pair is considered only when
-    they SHARE a term. Results are identical to percolate_batch
-    (differential-tested). Duplicate (terms, min_match) shapes run once
-    and fan back out (_dedup_stored, Monitor QueryIndex analog).
+def _local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A driver-built table (shapes, term bits, qid mappings) as a local
+    relation through Arrow: the plan carries the rows, so the jobs that
+    broadcast it start no Python worker, where a list-of-tuples
+    createDataFrame re-reads pickled rows through Python tasks."""
+    if not rows:
+        return spark.createDataFrame([], schema)
+    import pandas as pd
 
-    r7 plan: when the DISTINCT shapes and their term vocabulary are small
-    (caps above), matching runs as per-doc presence BITMASKS against the
-    broadcast shape table — n_matched is a popcount, the only join is the
-    broadcast fan-out, and nothing doc-scaled is ever shuffled. The shape
-    dedup itself runs on the driver for small query tables (one collect,
-    no shuffles). Larger registries keep the equi-join + aggregation plan
-    (scales in Σ df)."""
-    spark = docs.sparkSession
-    got = _driver_dedup(queries, ["terms", "min_match"])
+    return spark.createDataFrame(pd.DataFrame(rows), schema)
+
+
+def _percolate_flat(docs: DataFrame, queries: DataFrame, text_col: str,
+                    shape_cols) -> DataFrame:
+    """Shared body of percolate_prefiltered / percolate_full: dedup the
+    stored rows to distinct shapes (on the driver for small tables, else
+    _dedup_stored plus one collect of the distinct shapes), match each as
+    a one-clause shape through _tree_match_core, fan back out per qid.
+    min_match is clamped to >= 1: a pair sharing no term never matches
+    (the Monitor pre-filter's candidate contract)."""
+    queries = queries.select("qid", *shape_cols)
+    got = _driver_dedup(queries, shape_cols)
     if got is not None:
         uniq_rows, mapping = got
-        iv = sorted({t for _q, (terms, _m) in uniq_rows for t in terms})
-        if len(uniq_rows) <= _MASK_MAX_SETS and len(iv) <= _MASK_MAX_TERMS:
-            n_words = max(1, (len(iv) + 63) // 64)
-            bit_of = {t: j for j, t in enumerate(iv)}
-            srows = [
-                (q, _mask_words(terms, bit_of, n_words), int(m))
-                for q, (terms, m) in uniq_rows
-            ]
-            sets_df = spark.createDataFrame(
-                srows, "qid int, req array<bigint>, min_match int"
-            )
-            docm = _doc_masks(docs, text_col, iv)
-            nm = _popcount_and(F.col("__mask__"), F.col("req"), n_words)
-            matches = (
-                docm.crossJoin(F.broadcast(sets_df))
-                .withColumn("n_matched", nm.cast("long"))
-                # the equi-join plan only ever SEES pairs sharing a term,
-                # so n_matched >= 1 is part of its contract — keep it
-                .filter((F.col("n_matched") >= F.col("min_match"))
-                        & (F.col("n_matched") >= 1))
-                .select("qid", "doc_id", "n_matched")
-            )
-            return _fan_out(matches, mapping, extra=("n_matched",))
-        uniq = F.broadcast(spark.createDataFrame(
-            [(q, sorted(t), int(m)) for q, (t, m) in uniq_rows],
-            "qid int, terms array<string>, min_match int",
-        ))
-        return _fan_out(_prefilter_body(docs, uniq, text_col), mapping,
-                        extra=("n_matched",))
-    uniq, mapping = _dedup_stored(
-        queries.select("qid", "terms", "min_match"), ["terms", "min_match"]
-    )
-    return _fan_out(_prefilter_body(docs, uniq, text_col), mapping,
+        uniq = [(q, dict(zip(shape_cols, key))) for q, key in uniq_rows]
+    else:
+        u, mapping = _dedup_stored(queries, shape_cols)
+        uniq = [(r["qid"], r.asDict()) for r in u.collect()]
+    sets = [
+        {"sid": int(q), "terms": set(v["terms"] or ()),
+         "nots": set(v.get("not_terms") or ()),
+         "phrases": [list(v["phrase"])] if v.get("phrase") else [],
+         "patterns": [], "sloppy": [], "fuzzies": [], "ranges": [],
+         "min_match": max(int(v["min_match"]), 1)}
+        for q, v in uniq
+    ]
+    matches = _tree_match_core(docs, text_col, sets)
+    return _fan_out(matches.withColumnRenamed("sid", "qid"), mapping,
                     extra=("n_matched",))
 
 
-def _percolate_full_masked(docs, shapes, q_mapping, iv, text_col) -> DataFrame:
-    """Bitmask plan for percolate_full's deduped shapes (r7): the positive
-    and NOT legs evaluate as mask ops against the broadcast shape table;
-    only the phrase constraint keeps its position-anchor join, restricted
-    to the shapes that have one. Results identical to the join-leg plan."""
-    spark = docs.sparkSession
-    n_words = max(1, (len(iv) + 63) // 64)
-    bit_of = {t: j for j, t in enumerate(iv)}
-    phs = sorted({tuple(r["phrase"] or []) for r in shapes if (r["phrase"] or [])})
-    ph_idx = {p: j for j, p in enumerate(phs)}
-    inline_ph = 0 < len(phs) <= _MASK_MAX_EXISTS
-    srows, slot_rows = [], []
-    for r in shapes:
-        qid = int(r["qid"])
-        phrase = [t for t in (r["phrase"] or [])]
-        srows.append((
-            qid,
-            _mask_words(set(r["terms"] or []), bit_of, n_words),
-            _mask_words(set(r["not_terms"] or []), bit_of, n_words),
-            int(r["min_match"]),
-            bool(phrase),
-            ph_idx[tuple(phrase)] if (phrase and inline_ph) else -1,
-        ))
-        if not inline_ph:
-            for slot, term in enumerate(phrase):
-                slot_rows.append((qid, len(phrase), slot, term))
-    sets_df = spark.createDataFrame(
-        srows,
-        "qid int, req array<bigint>, nots array<bigint>, "
-        "min_match int, has_ph boolean, phi int",
-    )
-    keep = []
-    if inline_ph:
-        # an exact phrase is a consecutive run of whitespace tokens: it
-        # occurs iff ' p1 p2 .. ' substrings the space-normalized token
-        # string — the whole positions/anchor leg becomes one flag column
-        joined = F.concat(
-            F.lit(" "), F.array_join(tokens(text_col), " "), F.lit(" ")
-        )
-        keep.append(F.array(*[
-            joined.contains(" " + " ".join(p) + " ") for p in phs
-        ]).alias("__phf__"))
-    docm = _doc_masks(docs, text_col, iv, keep_cols=keep)
-    nm = _popcount_and(F.col("__mask__"), F.col("req"), n_words)
-    cond = (
-        (F.col("n_matched") >= F.col("min_match"))
-        & (F.col("n_matched") >= 1)
-        & _disjoint(F.col("__mask__"), F.col("nots"), n_words)
-    )
-    if inline_ph:
-        cond = cond & (~F.col("has_ph") | F.get(F.col("__phf__"), F.col("phi")))
-    cand = (
-        docm.crossJoin(F.broadcast(sets_df))
-        .withColumn("n_matched", nm.cast("long"))
-        .filter(cond)
-        .select("qid", "doc_id", "n_matched", "has_ph")
-    )
-    if inline_ph or not slot_rows:
-        return _fan_out(cand.drop("has_ph"), q_mapping, extra=("n_matched",))
-    slots = spark.createDataFrame(
-        slot_rows, "qid int, n_slots int, slot int, term string"
-    )
-    dpos = docs.select(
-        "doc_id", F.posexplode(tokens(text_col)).alias("pos", "term")
-    )
-    anchored = (
-        dpos.join(F.broadcast(slots), "term")
-        .select("qid", "doc_id", "n_slots", "slot",
-                (F.col("pos") - F.col("slot")).alias("anchor"))
-        .groupBy("qid", "doc_id", "anchor", "n_slots")
-        .agg(F.count_distinct("slot").alias("hit_slots"))
-        .filter(F.col("hit_slots") == F.col("n_slots"))
-        .select("qid", "doc_id")
-        .distinct()
-    )
-    ok = cand.filter(~F.col("has_ph")).drop("has_ph").unionByName(
-        cand.filter(F.col("has_ph")).drop("has_ph")
-        .join(anchored, ["qid", "doc_id"], "left_semi")
-    )
-    return _fan_out(ok, q_mapping, extra=("n_matched",))
+def percolate_prefiltered(docs: DataFrame, queries: DataFrame, text_col: str = "text") -> DataFrame:
+    """Percolation for large stored-query sets — the Monitor's query-index
+    pre-filter (monitor/Monitor.java:42, CandidateMatcher.java): a (doc,
+    query) pair matches when they share >= max(min_match, 1) terms.
+    Results are identical to percolate_batch (differential-tested), with
+    ``n_matched`` the number of the query's distinct terms in the doc.
+
+    Duplicate (terms, min_match) shapes run once and fan back out (Monitor
+    QueryIndex analog). Matching is the percolator core: per-doc presence
+    bitmasks against the broadcast table of distinct shapes, n_matched a
+    popcount over each shape's banked mask words. Every join is a
+    broadcast; nothing doc-scaled is shuffled beyond the one (doc_id)
+    group that builds masks over a vocabulary of more than 62 terms."""
+    return _percolate_flat(docs, queries, text_col, ["terms", "min_match"])
 
 
 def percolate_full(
@@ -413,101 +310,14 @@ def percolate_full(
     ``not_terms`` occur (empty/null = no exclusion), and ``phrase`` (an
     exact consecutive-token run; empty/null = no phrase) occurs.
 
-    Streaming note: the NOT/phrase legs aggregate, so in Structured
-    Streaming run this from ``foreachBatch`` (micro-batch = static frame);
-    the pure pre-filter (``percolate_batch``) remains the append-mode
-    stream-static form.
-
-    All three constraints are shuffle joins — no cross product, no
-    per-doc Python:
-      positive   explode+equi-join on term (the existing pre-filter);
-      NOT        anti-join candidates against (doc, excluded-term) hits;
-      phrase     anchor trick: join doc (term, pos) rows with the
-                 phrase's (term, slot-offset) rows, anchor = pos - offset;
-                 a doc position anchors the phrase iff ALL slots agree on
-                 the anchor — count distinct slots per (qid, doc, anchor)
-                 and keep groups hitting the full slot count.
-    """
-    got = _driver_dedup(
-        queries.select("qid", "terms", "min_match", "not_terms", "phrase"),
-        ["terms", "min_match", "not_terms", "phrase"],
-    )
-    if got is not None:
-        uniq_rows, q_mapping = got
-        shapes = [
-            {"qid": q, "terms": sorted(t), "min_match": int(m),
-             "not_terms": sorted(n), "phrase": list(p)}
-            for q, (t, m, n, p) in uniq_rows
-        ]
-        iv = sorted(
-            {t for r in shapes for t in r["terms"]}
-            | {t for r in shapes for t in r["not_terms"]}
-        )
-        if len(shapes) <= _MASK_MAX_SETS and len(iv) <= _MASK_MAX_TERMS:
-            return _percolate_full_masked(docs, shapes, q_mapping, iv, text_col)
-        queries = docs.sparkSession.createDataFrame(
-            [(r["qid"], r["terms"], r["min_match"], r["not_terms"], r["phrase"])
-             for r in shapes],
-            "qid int, terms array<string>, min_match int, "
-            "not_terms array<string>, phrase array<string>",
-        )
-    else:
-        queries, q_mapping = _dedup_stored(
-            queries.select("qid", "terms", "min_match", "not_terms", "phrase"),
-            ["terms", "min_match", "not_terms", "phrase"],
-        )
-    cand = _prefilter_body(docs, queries, text_col)
-
-    # one tiny agg over the (small) stored-query table decides which legs
-    # exist at all: a NOT-free set skips the exclusion join, a phrase-free
-    # set skips the full positions explode — the expensive legs only run
-    # when some stored query needs them
-    flags = queries.agg(
-        F.max(F.size(F.coalesce("not_terms", F.array()))).alias("n"),
-        F.max(F.size(F.coalesce("phrase", F.array()))).alias("p"),
-    ).collect()[0]
-    any_nots = (flags["n"] or 0) > 0
-    any_phrase = (flags["p"] or 0) > 0
-
-    dterms = docs.select(
-        "doc_id", F.explode(F.array_distinct(tokens(text_col))).alias("term")
-    )
-    if any_nots:
-        qnot = queries.select(
-            "qid", F.explode_outer("not_terms").alias("term")
-        ).filter(F.col("term").isNotNull())
-        excluded_pairs = qnot.join(dterms, "term").select("qid", "doc_id").distinct()
-        cand = cand.join(excluded_pairs, ["qid", "doc_id"], "left_anti")
-    if not any_phrase:
-        return _fan_out(cand, q_mapping, extra=("n_matched",))
-
-    has_phrase = queries.filter(F.size(F.coalesce("phrase", F.array())) > 0)
-    slots = has_phrase.select(
-        "qid",
-        F.size("phrase").alias("n_slots"),
-        F.posexplode("phrase").alias("slot", "term"),
-    )
-    dpos = docs.select(
-        "doc_id", F.posexplode(tokens(text_col)).alias("pos", "term")
-    )
-    anchored = (
-        dpos.join(slots, "term")
-        .select("qid", "doc_id", "n_slots", "slot", (F.col("pos") - F.col("slot")).alias("anchor"))
-        .groupBy("qid", "doc_id", "anchor", "n_slots")
-        .agg(F.count_distinct("slot").alias("hit_slots"))
-        .filter(F.col("hit_slots") == F.col("n_slots"))
-        .select("qid", "doc_id")
-        .distinct()
-    )
-    phrase_fail = (
-        has_phrase.select("qid")
-        .join(cand, "qid")
-        .select("qid", "doc_id")
-        .join(anchored, ["qid", "doc_id"], "left_anti")
-    )
-    return _fan_out(
-        cand.join(phrase_fail, ["qid", "doc_id"], "left_anti"), q_mapping,
-        extra=("n_matched",),
+    Each distinct shape is one clause of the percolator core: terms and
+    NOT terms are banked mask tests, the phrase a per-doc substring flag
+    (<= 32 distinct phrases) or the position-anchor join leg. Streaming
+    note: the core aggregates per doc, so in Structured Streaming run this
+    from ``foreachBatch`` (micro-batch = static frame); ``percolate_batch``
+    remains the append-mode stream-static form."""
+    return _percolate_flat(
+        docs, queries, text_col, ["terms", "min_match", "not_terms", "phrase"]
     )
 
 
@@ -723,26 +533,23 @@ def _set_key(s: dict) -> str:
     ], default=list)
 
 
-def _tree_mask_applicable(sets) -> bool:
-    iv = {t for s in sets for t in s["terms"]} | {t for s in sets for t in s["nots"]}
-    pats = {p for s in sets for p in s["patterns"]}
-    rngs = {r for s in sets for r in s["ranges"]}
-    return (
-        len(sets) <= _MASK_MAX_SETS
-        and len(iv) <= _MASK_MAX_TERMS
-        and len(pats) <= _MASK_MAX_EXISTS
-        and len(rngs) <= _MASK_MAX_EXISTS
-    )
+def _tree_match_core(docs: DataFrame, text_col: str, sets) -> DataFrame:
+    """(sid, doc_id, n_matched) for every distinct clause shape in
+    ``sets`` (_set_dict-shaped dicts plus ``sid`` and, for flat shapes,
+    ``min_match``) — the one percolator matching core.
 
-
-def _tree_match_core(docs: DataFrame, text_col: str, sets, spark) -> DataFrame:
-    """(sid, doc_id) matches of every distinct clause shape (r7 mask plan):
-    term/NOT constraints are per-doc presence bitmasks checked against the
-    broadcast shape table; patterns/ranges are inline exists() columns;
-    fuzzies expand against the batch vocabulary (the one UDF leg) into a
-    per-doc matched-constraint set; phrases/sloppy keep their position
-    join legs, restricted to the shapes that carry them. No doc-scaled
-    shuffle anywhere except the fuzzy vocabulary aggregation."""
+    Every constraint that is a per-doc fact is a bit of the doc mask: the
+    stored terms (NOT terms included), <= 32 distinct patterns / ranges /
+    exact phrases as inline exists() or substring flags, and fuzzies plus
+    patterns / ranges beyond 32 expanded against the batch vocabulary into
+    (term, bit) rows. Each shape keeps three banked bit groups — counted
+    terms, all-required constraints, NOT terms — so a (doc, shape) pair is
+    K popcounts against the broadcast shape table (HERO-style banked set
+    containment): n_matched = counted terms present >= min_match (a tree
+    clause needs all |terms|), every required bit present, no NOT bit.
+    Only phrases beyond the inline limit and sloppy phrases keep their
+    position join legs, restricted to the shapes that carry them."""
+    spark = docs.sparkSession
     iv = sorted(
         {t for s in sets for t in s["terms"]}
         | {t for s in sets for t in s["nots"]}
@@ -756,29 +563,35 @@ def _tree_match_core(docs: DataFrame, text_col: str, sets, spark) -> DataFrame:
     # positions explode, no anchor join); many distinct phrases keep the
     # join leg below
     phs = sorted({tuple(p) for s in sets for p in s["phrases"]})
-    inline_ph = 0 < len(phs) <= _MASK_MAX_EXISTS
-    n_words = max(1, (len(iv) + 63) // 64)
-    bit_of = {t: j for j, t in enumerate(iv)}
-    pat_idx = {p: j for j, p in enumerate(pats)}
-    rng_idx = {r: j for j, r in enumerate(rngs)}
-    fz_idx = {f: j for j, f in enumerate(fzs)}
-    ph_idx = {p: j for j, p in enumerate(phs)}
-    srows = [
-        (
-            int(s["sid"]),
-            _mask_words(s["terms"], bit_of, n_words),
-            _mask_words(s["nots"], bit_of, n_words),
-            sorted({pat_idx[p] for p in s["patterns"]}),
-            sorted({rng_idx[r] for r in s["ranges"]}),
-            sorted({fz_idx[f] for f in s["fuzzies"]}),
-            sorted({ph_idx[tuple(p)] for p in s["phrases"]}) if inline_ph else [],
+    inline_ph = len(phs) <= _MASK_MAX_EXISTS
+    bit = {("t", t): j for j, t in enumerate(iv)}
+    for key in ([("p", p) for p in pats] + [("r", r) for r in rngs]
+                + [("f", f) for f in fzs]
+                + ([("h", p) for p in phs] if inline_ph else [])):
+        bit[key] = len(bit)
+    n_words = max(1, (len(bit) + 63) // 64)
+
+    cnt, req, nots = [], [], []
+    for s in sets:
+        cnt.append({bit["t", t] for t in s["terms"]})
+        nots.append({bit["t", t] for t in s["nots"]})
+        req.append(
+            {bit["p", p] for p in s["patterns"]}
+            | {bit["r", r] for r in s["ranges"]}
+            | {bit["f", f] for f in s["fuzzies"]}
+            | ({bit["h", tuple(p)] for p in s["phrases"]} if inline_ph else set())
         )
-        for s in sets
-    ]
-    sets_df = spark.createDataFrame(
-        srows,
-        "sid int, req array<bigint>, nots array<bigint>, "
-        "patr array<int>, rngr array<int>, fzr array<int>, phr array<int>",
+    kc, bc = _banks(cnt)
+    kr, br = _banks(req)
+    kn, bn = _banks(nots)
+    sets_df = _local_df(
+        spark,
+        [
+            (int(s["sid"]), int(s.get("min_match", len(c))), len(r), *wc, *wr, *wn)
+            for s, c, r, wc, wr, wn in zip(sets, cnt, req, bc, br, bn)
+        ],
+        "sid int, min_match int, n_req int, cw array<int>, cm array<bigint>, "
+        "rw array<int>, rm array<bigint>, nw array<int>, nm array<bigint>",
     )
     toks_d = F.array_distinct(tokens(text_col))
 
@@ -791,61 +604,58 @@ def _tree_match_core(docs: DataFrame, text_col: str, sets, spark) -> DataFrame:
     def _range_fn(lo, hi):
         return lambda t: (t >= lo) & (t <= hi)
 
-    keep = []
-    if pats:
-        keep.append(F.array(*[
-            F.exists(toks_d, _like_fn(p)) for p in pats
-        ]).alias("__pat__"))
-    if rngs:
-        keep.append(F.array(*[
-            F.exists(toks_d, _range_fn(lo, hi)) for lo, hi in rngs
-        ]).alias("__rng__"))
-    if inline_ph:
-        joined = F.concat(
-            F.lit(" "), F.array_join(tokens(text_col), " "), F.lit(" ")
+    flags, expand = [], []
+    vocab = docs.select(F.explode(toks_d).alias("term")).distinct()
+    if len(pats) <= _MASK_MAX_EXISTS:
+        flags += [(bit["p", p], F.exists(toks_d, _like_fn(p))) for p in pats]
+    else:
+        pat_df = _local_df(
+            spark, [(p, bit["p", p]) for p in pats], "pat string, bit int"
         )
-        keep.append(F.array(*[
-            joined.contains(" " + " ".join(p) + " ") for p in phs
-        ]).alias("__phf__"))
-    docm = _doc_masks(docs, text_col, iv, keep_cols=keep)
+        expand.append(vocab.join(F.broadcast(pat_df), F.expr("term LIKE pat"))
+                      .select("term", "bit"))
+    if len(rngs) <= _MASK_MAX_EXISTS:
+        flags += [(bit["r", r], F.exists(toks_d, _range_fn(*r))) for r in rngs]
+    else:
+        rng_df = _local_df(
+            spark, [(lo, hi, bit["r", (lo, hi)]) for lo, hi in rngs],
+            "rlo string, rhi string, bit int",
+        )
+        in_range = F.col("term").between(F.col("rlo"), F.col("rhi"))
+        expand.append(
+            vocab.join(F.broadcast(rng_df), in_range).select("term", "bit")
+        )
     if fzs:
         from .functions.fuzzy import damerau_pair_predicate
 
-        fz_df = spark.createDataFrame(
-            [(t, int(e), j) for (t, e), j in fz_idx.items()],
-            "fterm string, fedits int, fid int",
+        fz_df = _local_df(
+            spark, [(t, int(e), bit["f", (t, e)]) for t, e in fzs],
+            "fterm string, fedits int, bit int",
         )
-        vocab = docs.select(F.explode(toks_d).alias("term")).distinct()
-        fmatch = (
+        expand.append(
             vocab.crossJoin(F.broadcast(fz_df))
             .filter(damerau_pair_predicate(
                 F.col("term"), F.col("fterm"), F.col("fedits")))
-            .select("term", "fid")
+            .select("term", "bit")
         )
-        dterms = docs.select("doc_id", F.explode(toks_d).alias("term"))
-        fhits = (
-            dterms.join(fmatch, "term")
-            .groupBy("doc_id")
-            .agg(F.collect_set("fid").alias("__fz__"))
+    if inline_ph and phs:
+        joined = F.concat(
+            F.lit(" "), F.array_join(tokens(text_col), " "), F.lit(" ")
         )
-        docm = docm.join(fhits, "doc_id", "left")
+        flags += [(bit["h", p], joined.contains(" " + " ".join(p) + " "))
+                  for p in phs]
+    docm = _doc_masks(docs, text_col, iv, n_words, flags, expand)
 
-    cond = _covers(F.col("__mask__"), F.col("req"), n_words) & _disjoint(
-        F.col("__mask__"), F.col("nots"), n_words
-    )
-    if pats:
-        cond = cond & F.forall("patr", lambda j: F.get(F.col("__pat__"), j))
-    if rngs:
-        cond = cond & F.forall("rngr", lambda j: F.get(F.col("__rng__"), j))
-    if fzs:
-        fz_set = F.coalesce(F.col("__fz__"), F.array().cast("array<int>"))
-        cond = cond & F.forall(
-            "fzr", lambda j: F.exists(fz_set, lambda x: x == j)
-        )
-    if inline_ph:
-        cond = cond & F.forall("phr", lambda j: F.get(F.col("__phf__"), j))
+    cond = F.col("n_matched") >= F.col("min_match")
+    if kr:
+        cond &= _bank_count("rw", "rm", kr) == F.col("n_req")
+    if kn:
+        cond &= _bank_count("nw", "nm", kn) == 0
     matches = (
-        docm.crossJoin(F.broadcast(sets_df)).filter(cond).select("sid", "doc_id")
+        docm.crossJoin(F.broadcast(sets_df))
+        .withColumn("n_matched", _bank_count("cw", "cm", kc).cast("long"))
+        .filter(cond)
+        .select("sid", "doc_id", "n_matched")
     )
 
     ph_sets = [] if inline_ph else [s for s in sets if s["phrases"]]
@@ -862,8 +672,8 @@ def _tree_match_core(docs: DataFrame, text_col: str, sets, spark) -> DataFrame:
             for pid, phr in enumerate(s["phrases"])
             for slot, term in enumerate(phr)
         ]
-        slots = spark.createDataFrame(
-            slot_rows,
+        slots = _local_df(
+            spark, slot_rows,
             "sid int, n_ph int, pid int, n_slots int, slot int, term string",
         )
         anchored = (
@@ -888,13 +698,18 @@ def _tree_match_core(docs: DataFrame, text_col: str, sets, spark) -> DataFrame:
             .join(ok_p, ["sid", "doc_id"], "left_semi")
         )
     if sl_sets:
+        # 2-term sloppy phrases match when SOME position pair sits within
+        # the slop band — |pa + gap - pb| <= slop is exactly Lucene's
+        # 2-term matchLength (SloppyPhraseMatcher.java:200-236) — as an
+        # equi-join on (doc, term) with a position band predicate; the
+        # pair's terms are already counted terms, so the mask pre-filters
         sl_rows = [
             (int(s["sid"]), len(s["sloppy"]), slid, ta, tb, int(gap), int(slop))
             for s in sl_sets
             for slid, (ta, tb, gap, slop) in enumerate(s["sloppy"])
         ]
-        srow = spark.createDataFrame(
-            sl_rows,
+        srow = _local_df(
+            spark, sl_rows,
             "sid int, n_sl int, slid int, ta string, tb string, "
             "gap int, slop int",
         )
@@ -929,6 +744,22 @@ def _tree_match_core(docs: DataFrame, text_col: str, sets, spark) -> DataFrame:
     return matches
 
 
+def _match_query_shapes(docs, text_col, sets, member_df, qid_of_shape) -> DataFrame:
+    """(qid, doc_id) distinct from the core's clause matches: member_df
+    (shape_id, sid) lists each distinct QUERY shape's clause sids and
+    qid_of_shape (shape_id, qid) its queries, so every query shape matches
+    once and the (qid, doc_id) fan-out is the last operator."""
+    shape_match = (
+        _tree_match_core(docs, text_col, sets)
+        .join(F.broadcast(member_df), "sid")
+        .select("shape_id", "doc_id")
+        .distinct()
+    )
+    return shape_match.join(F.broadcast(qid_of_shape), "shape_id").select(
+        "qid", "doc_id"
+    )
+
+
 def percolate_tree(
     docs: DataFrame,
     stored,
@@ -936,26 +767,21 @@ def percolate_tree(
 ) -> DataFrame:
     """Arbitrary-query percolation: stored queries are STRINGS in the
     engine's query syntax (nested booleans, +must / -not, "phrases",
-    prefix* and wild?card*), decomposed per QueryDecomposer.
+    prefix* and wild?card*, "a b"~n, term~n, [lo TO hi]), decomposed per
+    QueryDecomposer.
     ``stored``: list of (qid, query_string) for small registration sets,
     OR a DataFrame(qid, query) — then parsing + decomposition run
     DISTRIBUTED inside mapInPandas (the registration path scales with the
-    stored-query count).
+    stored-query count) and only the distinct clause shapes are collected.
 
     Stored queries are parsed with an empty stop set — the percolator's
     tokenizer is a plain whitespace split, so stopwords are ordinary
     terms here.
 
-    r7 execution plan: matching runs on DISTINCT clause shapes (Monitor
-    QueryIndex analog), and additionally on distinct QUERY shapes (the
-    set of clause shapes a query decomposes to), so the (qid, doc_id)
-    fan-out is the LAST operator with nothing shuffled after it. When the
-    distinct shapes fit the bitmask caps, the term/NOT/pattern/range legs
-    evaluate as per-doc bitmask + inline-exists expressions against the
-    broadcast shape table (_tree_match_core) — no doc-scaled shuffle;
-    larger registries fall back to the equi-join legs
-    (_percolate_tree_joins, scales in Σ df over clause rows). Returns
-    (qid, doc_id) distinct."""
+    Matching runs once per DISTINCT clause shape (Monitor QueryIndex
+    analog) through the percolator core (_tree_match_core), for any
+    registry size, and maps back through distinct QUERY shapes (the set of
+    clause shapes a query decomposes to). Returns (qid, doc_id) distinct."""
     from .search.plan import parse_tree
 
     spark = docs.sparkSession
@@ -994,367 +820,56 @@ def percolate_tree(
                                "sloppy", "fuzzies", "ranges")), 256,
         )
         keyed = clauses.withColumn("skey", skey)
-        set_rows = _collect_small(
-            keyed.drop("qid", "cid").dropDuplicates(["skey"]), _MASK_MAX_SETS
+        set_rows = keyed.drop("qid", "cid").dropDuplicates(["skey"]).collect()
+        sets = []
+        sid_rows = []
+        for r in sorted(set_rows, key=lambda r: r["skey"]):
+            d = _set_dict(r)
+            d["sid"] = len(sets)
+            sid_rows.append((r["skey"], d["sid"]))
+            sets.append(d)
+        sid_df = _local_df(spark, sid_rows, "skey string, sid int")
+        qshape = (
+            keyed.select("qid", "skey").distinct()
+            .join(F.broadcast(sid_df), "skey")
+            .groupBy("qid")
+            .agg(F.sort_array(F.collect_set("sid")).alias("sig"))
         )
-        if set_rows is not None:
-            sets = []
-            sid_rows = []
-            for r in sorted(set_rows, key=lambda r: r["skey"]):
-                d = _set_dict(r)
-                d["sid"] = len(sets)
-                sid_rows.append((r["skey"], d["sid"]))
-                sets.append(d)
-            if _tree_mask_applicable(sets):
-                sid_df = spark.createDataFrame(sid_rows, "skey string, sid int")
-                qshape = (
-                    keyed.select("qid", "skey").distinct()
-                    .join(F.broadcast(sid_df), "skey")
-                    .groupBy("qid")
-                    .agg(F.sort_array(F.collect_set("sid")).alias("sig"))
-                )
-                shapes_w = qshape.groupBy("sig").agg(
-                    F.min("qid").alias("shape_id")
-                )
-                member_df = shapes_w.select(
-                    "shape_id", F.explode("sig").alias("sid")
-                )
-                qid_of_shape = qshape.join(shapes_w, "sig").select(
-                    "shape_id", "qid"
-                )
-                matches = _tree_match_core(docs, text_col, sets, spark)
-                shape_match = (
-                    matches.join(F.broadcast(member_df), "sid")
-                    .select("shape_id", "doc_id")
-                    .distinct()
-                )
-                return shape_match.join(qid_of_shape, "shape_id").select(
-                    "qid", "doc_id"
-                )
-        # too many distinct shapes / vocabulary for the mask plan
-        flags = clauses.agg(
-            F.max(F.size("phrases")).alias("p"),
-            F.max(F.size("patterns")).alias("x"),
-            F.max(F.size("not_terms")).alias("n"),
-            F.max(F.size("sloppy")).alias("s"),
-            F.max(F.size("fuzzies")).alias("f"),
-            F.max(F.size("ranges")).alias("r"),
-        ).collect()[0]
-        return _percolate_tree_joins(
-            docs, clauses.persist(), text_col,
-            any_phrases=(flags["p"] or 0) > 0,
-            any_patterns=(flags["x"] or 0) > 0,
-            any_nots=(flags["n"] or 0) > 0,
-            any_sloppy=(flags["s"] or 0) > 0,
-            any_fuzzy=(flags["f"] or 0) > 0,
-            any_ranges=(flags["r"] or 0) > 0,
-        )
+        shapes_w = qshape.groupBy("sig").agg(F.min("qid").alias("shape_id"))
+        member_df = shapes_w.select("shape_id", F.explode("sig").alias("sid"))
+        qid_of_shape = qshape.join(shapes_w, "sig").select("shape_id", "qid")
+        return _match_query_shapes(docs, text_col, sets, member_df, qid_of_shape)
 
     # --- list registration: parse + dedup entirely on the driver (each
     # DISTINCT query string parses once; alerting sets repeat massively)
     parse_cache: dict = {}
     sets_by_key: dict = {}
-    qid_keys = []
-    rows = []
+    shape_of: dict = {}
+    member_rows = []
+    q_rows = []
     for qid, qstr in stored:
         qs = str(qstr)
         if qs not in parse_cache:
             parse_cache[qs] = decompose_query(
                 parse_tree(qs, stop_words=frozenset())
             )
-        cl = parse_cache[qs]
-        keys = []
-        for ci, c in enumerate(cl):
-            rows.append(_crow(qid, ci, c))
-            k = _set_key(_set_dict(rows[-1]))
+        keys = set()
+        for ci, c in enumerate(parse_cache[qs]):
+            d = _set_dict(_crow(qid, ci, c))
+            k = _set_key(d)
             if k not in sets_by_key:
-                d = _set_dict(rows[-1])
                 d["sid"] = len(sets_by_key)
                 sets_by_key[k] = d
-            keys.append(sets_by_key[k]["sid"])
-        qid_keys.append((int(qid), tuple(sorted(set(keys)))))
-    sets = sorted(sets_by_key.values(), key=lambda d: d["sid"])
-    if _tree_mask_applicable(sets):
-        shape_of: dict = {}
-        member_rows = []
-        q_rows = []
-        for qid, sig in qid_keys:
-            if sig not in shape_of:
-                shape_of[sig] = qid
-                member_rows.extend((qid, sid) for sid in sig)
-            q_rows.append((shape_of[sig], qid))
-        member_df = spark.createDataFrame(member_rows, "shape_id int, sid int")
-        qid_of_shape = spark.createDataFrame(q_rows, "shape_id int, qid int")
-        matches = _tree_match_core(docs, text_col, sets, spark)
-        shape_match = (
-            matches.join(F.broadcast(member_df), "sid")
-            .select("shape_id", "doc_id")
-            .distinct()
-        )
-        return shape_match.join(qid_of_shape, "shape_id").select("qid", "doc_id")
-    clauses = spark.createDataFrame(rows, _CLAUSE_SCHEMA)
-    return _percolate_tree_joins(
-        docs, clauses, text_col,
-        any_phrases=any(r["phrases"] for r in rows),
-        any_patterns=any(r["patterns"] for r in rows),
-        any_nots=any(r["not_terms"] for r in rows),
-        any_sloppy=any(r["sloppy"] for r in rows),
-        any_fuzzy=any(r["fuzzies"] for r in rows),
-        any_ranges=any(r["ranges"] for r in rows),
-    )
-
-
-def _percolate_tree_joins(
-    docs: DataFrame,
-    clauses: DataFrame,
-    text_col: str,
-    any_phrases: bool,
-    any_patterns: bool,
-    any_nots: bool,
-    any_sloppy: bool,
-    any_fuzzy: bool,
-    any_ranges: bool,
-) -> DataFrame:
-    """The fully distributed equi-join legs (pre-r7 plan), kept for
-    registries beyond the mask caps: every leg is a shuffle equi-join
-    scaling in Σ terms; the only broadcast is the pattern table (patterns
-    expand against the BATCH VOCABULARY first)."""
-    dterms = docs.select(
-        "doc_id", F.explode(F.array_distinct(tokens(text_col))).alias("term")
-    )
-    # --- clause-set dedup (Monitor QueryIndex analog: identical stored
-    # queries are indexed once, monitor/QueryIndex.java caches by hash):
-    # alerting workloads repeat clause shapes massively, and every join leg
-    # below scales in Σ df(term) over CLAUSE rows — running the legs on
-    # distinct (terms, nots, phrases, patterns) sets and mapping back to
-    # qids at the end cuts that volume by the duplication factor
-    clauses = clauses.withColumn(
-        "skey",
-        F.sha2(F.to_json(F.struct("terms", "not_terms", "phrases", "patterns",
-                                  "sloppy", "fuzzies", "ranges")), 256),
-    )
-    sets = (
-        clauses.select("skey", "terms", "not_terms", "phrases", "patterns",
-                       "sloppy", "fuzzies", "ranges")
-        .dropDuplicates(["skey"])
-        .persist()
-    )
-    key = ["skey"]
-
-    # --- terms leg: all of the clause's terms present
-    tleg = sets.filter(F.size("terms") > 0).select(
-        *key, F.size("terms").alias("n_terms"), F.explode("terms").alias("term")
-    )
-    ok_t = (
-        tleg.join(dterms, "term")
-        .groupBy(*key, "n_terms", "doc_id")
-        .agg(F.count_distinct("term").alias("nm"))
-        .filter(F.col("nm") == F.col("n_terms"))
-        .select(*key, "doc_id")
-    )
-
-    # --- pattern leg: expand LIKE patterns against the batch vocabulary,
-    # then equi-join; every pattern must be matched by >= 1 doc token
-    ok_x = None
-    if any_patterns:
-        prow = sets.filter(F.size("patterns") > 0).select(
-            *key, F.size("patterns").alias("n_pat"), F.explode("patterns").alias("pat")
-        )
-        vocab = dterms.select("term").distinct()
-        pterm = vocab.join(F.broadcast(prow), F.expr("term LIKE pat"))
-        ok_x = (
-            pterm.join(dterms, "term")
-            .groupBy(*key, "n_pat", "doc_id")
-            .agg(F.count_distinct("pat").alias("nm"))
-            .filter(F.col("nm") == F.col("n_pat"))
-            .select(*key, "doc_id")
-        )
-
-    # --- phrase leg: anchor trick per phrase, then all phrases present
-    ok_p = None
-    dpos = None
-    if any_phrases or any_sloppy:
-        dpos = docs.select(
-            "doc_id", F.posexplode(tokens(text_col)).alias("pos", "term")
-        )
-    if any_phrases:
-        ph = sets.filter(F.size("phrases") > 0).select(
-            *key, F.size("phrases").alias("n_ph"),
-            F.posexplode("phrases").alias("pid", "phr"),
-        )
-        slots = ph.select(
-            *key, "n_ph", "pid", F.size("phr").alias("n_slots"),
-            F.posexplode("phr").alias("slot", "term"),
-        )
-        anchored = (
-            dpos.join(slots, "term")
-            .select(*key, "n_ph", "pid", "doc_id", "n_slots",
-                    "slot", (F.col("pos") - F.col("slot")).alias("anchor"))
-            .groupBy(*key, "n_ph", "pid", "doc_id", "anchor", "n_slots")
-            .agg(F.count_distinct("slot").alias("hit_slots"))
-            .filter(F.col("hit_slots") == F.col("n_slots"))
-            .select(*key, "n_ph", "pid", "doc_id")
-            .distinct()
-        )
-        ok_p = (
-            anchored.groupBy(*key, "n_ph", "doc_id")
-            .agg(F.count_distinct("pid").alias("nm"))
-            .filter(F.col("nm") == F.col("n_ph"))
-            .select(*key, "doc_id")
-        )
-
-    # --- sloppy-phrase leg (r6 verify pass, monitor/CandidateMatcher.java
-    # analog): 2-term sloppy phrases match when SOME position pair sits
-    # within the slop band — |pa + gap - pb| <= slop is exactly Lucene's
-    # 2-term matchLength (SloppyPhraseMatcher.java:200-236) — evaluated as
-    # an equi-join on (term, doc) with a position band predicate, so the
-    # fan-out per doc is bounded by the slop window, not tf_a * tf_b.
-    # (The pair's terms are already required by the terms leg — that leg
-    # is the cheap prefilter, this one the verifier.)
-    ok_s = None
-    if any_sloppy:
-        srow = sets.filter(F.size("sloppy") > 0).select(
-            *key, F.size("sloppy").alias("n_sl"),
-            F.posexplode("sloppy").alias("sid", "sp"),
-        ).select(
-            *key, "n_sl", "sid", F.col("sp.ta").alias("ta"),
-            F.col("sp.tb").alias("tb"), F.col("sp.gap").alias("gap"),
-            F.col("sp.slop").alias("slop"),
-        )
-        pa = srow.join(dpos, srow.ta == dpos.term).select(
-            *key, "n_sl", "sid", "tb", "gap", "slop", "doc_id",
-            F.col("pos").alias("pos_a"),
-        )
-        pb = dpos.select(
-            F.col("doc_id").alias("doc_id_b"), F.col("term").alias("term_b"),
-            F.col("pos").alias("pos_b"),
-        )
-        hit = pa.join(
-            pb,
-            (F.col("doc_id") == F.col("doc_id_b"))
-            & (F.col("term_b") == F.col("tb"))
-            & (F.col("pos_b") != F.col("pos_a"))  # slots never collide
-            & (F.col("pos_b") >= F.col("pos_a") + F.col("gap") - F.col("slop"))
-            & (F.col("pos_b") <= F.col("pos_a") + F.col("gap") + F.col("slop")),
-        )
-        ok_s = (
-            hit.select(*key, "n_sl", "sid", "doc_id").distinct()
-            .groupBy(*key, "n_sl", "doc_id")
-            .agg(F.count_distinct("sid").alias("nm"))
-            .filter(F.col("nm") == F.col("n_sl"))
-            .select(*key, "doc_id")
-        )
-
-    # --- fuzzy leg (r6): expand each stored fuzzy constraint against the
-    # batch VOCABULARY (|vocab| x |distinct fuzzies| vectorized Damerau —
-    # the same expansion shape as the pattern leg's LIKE scan), then
-    # equi-join; every fuzzy must be matched by >= 1 doc token
-    ok_f = None
-    if any_fuzzy:
-        from .functions.fuzzy import damerau_pair_predicate
-
-        frow = sets.filter(F.size("fuzzies") > 0).select(
-            *key, F.size("fuzzies").alias("n_fz"),
-            F.posexplode("fuzzies").alias("fid", "fz"),
-        ).select(
-            *key, "n_fz", "fid", F.col("fz.fterm").alias("fterm"),
-            F.col("fz.fedits").alias("fedits"),
-        )
-        vocab = dterms.select("term").distinct()
-        fdist = frow.select("fterm", "fedits").distinct()
-        fmatch = vocab.crossJoin(F.broadcast(fdist)).filter(
-            damerau_pair_predicate(F.col("term"), F.col("fterm"), F.col("fedits"))
-        )
-        fterm = fmatch.join(F.broadcast(frow), ["fterm", "fedits"])
-        ok_f = (
-            fterm.join(dterms, "term")
-            .groupBy(*key, "n_fz", "doc_id")
-            .agg(F.count_distinct("fid").alias("nm"))
-            .filter(F.col("nm") == F.col("n_fz"))
-            .select(*key, "doc_id")
-        )
-
-    # --- term-range leg (r6): in-range vocabulary -> equi-join; every
-    # range must cover >= 1 doc token (TermRangeQuery match semantics)
-    ok_r = None
-    if any_ranges:
-        rrow = sets.filter(F.size("ranges") > 0).select(
-            *key, F.size("ranges").alias("n_rg"),
-            F.posexplode("ranges").alias("rid", "rg"),
-        ).select(
-            *key, "n_rg", "rid", F.col("rg.rlo").alias("rlo"),
-            F.col("rg.rhi").alias("rhi"),
-        )
-        vocab_r = dterms.select("term").distinct()
-        rterm = vocab_r.join(
-            F.broadcast(rrow),
-            (F.col("term") >= F.col("rlo")) & (F.col("term") <= F.col("rhi")),
-        )
-        ok_r = (
-            rterm.join(dterms, "term")
-            .groupBy(*key, "n_rg", "doc_id")
-            .agg(F.count_distinct("rid").alias("nm"))
-            .filter(F.col("nm") == F.col("n_rg"))
-            .select(*key, "doc_id")
-        )
-
-    # --- combine: every applicable leg must hold
-    LEGS = ["t", "p", "x", "s", "f", "r"]
-
-    def tag(df, name):
-        return df.withColumns(
-            {g: F.lit(1 if g == name else 0) for g in LEGS}
-        )
-
-    sat = tag(ok_t, "t")
-    for leg_df, name in ((ok_p, "p"), (ok_x, "x"), (ok_s, "s"),
-                         (ok_f, "f"), (ok_r, "r")):
-        if leg_df is not None:
-            sat = sat.unionByName(tag(leg_df, name))
-    sat = sat.groupBy(*key, "doc_id").agg(
-        *[F.max(g).alias(g) for g in LEGS]
-    )
-    meta = sets.select(
-        *key, F.size("terms").alias("n_terms"), F.size("phrases").alias("n_ph"),
-        F.size("patterns").alias("n_pat"), F.size("sloppy").alias("n_sl"),
-        F.size("fuzzies").alias("n_fz"), F.size("ranges").alias("n_rg"),
-    )
-    match = (
-        sat.join(meta, key)
-        .filter((F.col("n_terms") == 0) | (F.col("t") == 1))
-        .filter((F.col("n_ph") == 0) | (F.col("p") == 1))
-        .filter((F.col("n_pat") == 0) | (F.col("x") == 1))
-        .filter((F.col("n_sl") == 0) | (F.col("s") == 1))
-        .filter((F.col("n_fz") == 0) | (F.col("f") == 1))
-        .filter((F.col("n_rg") == 0) | (F.col("r") == 1))
-        .select(*key, "doc_id")
-    )
-
-    # --- NOT leg: anti-join docs containing any excluded term
-    if any_nots:
-        nrow = sets.select(*key, F.explode("not_terms").alias("term"))
-        bad = nrow.join(dterms, "term").select(*key, "doc_id").distinct()
-        match = match.join(bad, key + ["doc_id"], "left_anti")
-
-    qmap = clauses.select("qid", "skey").distinct()
-    out = match.join(qmap, "skey").select("qid", "doc_id").distinct()
-    # materialize so the interned clause/set caches can be released
-    # immediately — a long-running percolation loop would otherwise
-    # accumulate cached blocks across calls (ADVICE r5). r7: persist +
-    # eager count instead of localCheckpoint — a checkpointed block
-    # evicted under memory pressure is UNRECOVERABLE (lineage truncated;
-    # observed as "Block rdd_N does not exist" + job death in the r6
-    # sf1.0 driver bench), while an evicted MEMORY_AND_DISK persist block
-    # just recomputes. The match set is qid×doc pairs, orders of
-    # magnitude below the inputs.
-    from pyspark import StorageLevel
-
-    out = out.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    sets.unpersist()
-    if clauses.is_cached:
-        clauses.unpersist()
-    return out
+            keys.add(sets_by_key[k]["sid"])
+        sig = tuple(sorted(keys))
+        if sig not in shape_of:
+            shape_of[sig] = int(qid)
+            member_rows.extend((int(qid), sid) for sid in sig)
+        q_rows.append((shape_of[sig], int(qid)))
+    sets = list(sets_by_key.values())
+    member_df = _local_df(spark, member_rows, "shape_id int, sid int")
+    qid_of_shape = _local_df(spark, q_rows, "shape_id int, qid int")
+    return _match_query_shapes(docs, text_col, sets, member_df, qid_of_shape)
 
 
 def percolate_stream(spark: SparkSession, stream_df: DataFrame, queries: DataFrame,
@@ -1368,13 +883,3 @@ def percolate_stream(spark: SparkSession, stream_df: DataFrame, queries: DataFra
         .queryName(query_name)
         .start()
     )
-
-
-def incremental_append(spark: SparkSession, new_docs: DataFrame, index_dir: str, cfg=None):
-    """NRT-append analog: index a new micro-batch of docs as fresh segments
-    (docids continue after the current max, block binaries encoded with the
-    offset baked in), then refresh the snapshot-global artifacts. Use from
-    ``foreachBatch`` for a streaming ingest."""
-    from .index.builder import append_to_index
-
-    return append_to_index(spark, new_docs, index_dir, cfg)

@@ -215,6 +215,36 @@ def test_delete_by_query(spark, tmp_path):
     assert [r["docid"] for r in hits] == [3]  # doc 1 tombstoned
 
 
+def test_tombstoned_segment_without_query_terms(spark, tmp_path):
+    """A segment holding tombstones but none of the query's terms
+    contributes nothing to the per-segment top-k (it once crashed the
+    Python worker in the postings/tombstone cogroup)."""
+    from lucene_spark.index.builder import IndexConfig, build_index
+    from lucene_spark.search.executor import Index, search_exhaustive, search_query
+    from lucene_spark.search.plan import parse
+
+    # 4 segments of 10 docs; "zebra" occurs only in segment 0
+    rows = [(i, ("zebra " if i < 10 else "") + f"alpha beta w{i}") for i in range(40)]
+    docs = spark.createDataFrame(rows, "doc_id long, content string")
+    cfg = IndexConfig(docid_col="doc_id", content_col="content", num_segments=4,
+                      order_cols=("doc_id",))
+    idx = Index(spark, build_index(spark, docs, str(tmp_path / "tomb"), cfg))
+    q = parse("zebra")
+    before = [(r["docid"], r["score"]) for r in search_query(idx, q, k=20).collect()]
+    assert sorted(d for d, _ in before) == list(range(10))
+
+    def check(k, live):
+        got = [(r["docid"], r["score"]) for r in search_query(idx, q, k=k).collect()]
+        assert got == [(d, s) for d, s in before if d in live][:k]
+        exhaustive = search_exhaustive(idx, q, k=k).collect()
+        assert [r["docid"] for r in exhaustive] == [d for d, _ in got]
+
+    idx.delete_docs([10])  # segment 1 only: tombstones, no "zebra"
+    check(5, set(range(10)))
+    idx.delete_docs([3])  # now segment 0 has deletes too
+    check(20, set(range(10)) - {3})
+
+
 def test_append_collision_refused_and_update_semantics(spark, tmp_path):
     """Appending existing user docids refuses by default; update=True is
     IndexWriter.updateDocument (delete-then-add): the old doc disappears,

@@ -683,6 +683,138 @@ def test_percolate_dedup_fans_back_out(spark):
     assert n[(1, 0)] == n[(2, 0)] == n[(3, 0)] == 2  # spark+join both hit
 
 
+def test_percolate_large_registry_differential(spark):
+    """Large registries — >=10k distinct clause shapes, >=10k distinct
+    terms, more distinct prefix patterns, term ranges and phrases than
+    the 32 checked inline — through every percolate entry point (tree
+    with list AND >20k-row DataFrame registration, prefiltered, full)
+    against a plain-Python evaluator, n_matched included. For the terms,
+    NOT, prefix and range registries the executed plans must hold no
+    SortMergeJoin: matching is mask tests against broadcast shape tables,
+    never a shuffle join over exploded terms."""
+    import random
+
+    from lucene_spark.streaming import (
+        percolate_full, percolate_prefiltered, percolate_tree,
+    )
+
+    rng = random.Random(8)
+    hot = [f"h{i:03d}" for i in range(100)]
+    rare = [f"r{i:05d}" for i in range(12_000)]
+    texts = {d: rng.choices(hot, k=8) + rng.choices(rare, k=30)
+             for d in range(300)}
+    for toks in texts.values():
+        rng.shuffle(toks)
+    ddf = spark.createDataFrame(
+        [(d, " ".join(t)) for d, t in texts.items()], "doc_id long, text string"
+    )
+    docs_with: dict = {}
+    for d, toks in texts.items():
+        for t in toks:
+            docs_with.setdefault(t, set()).add(d)
+
+    def has(t):
+        return docs_with.get(t, set())
+
+    def no_smj(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "SortMergeJoin" not in plan, plan
+
+    # cycling a shuffled vocabulary puts every rare term in the registries
+    perm = rare[:]
+    rng.shuffle(perm)
+
+    # --- tree: (a OR b) AND c -d over 6k queries (12k distinct clause
+    # shapes, 12k distinct terms), plus 40 prefix and 40 term-range queries
+    stored, want_tree = [], set()
+    for q in range(6_000):
+        a, c = rng.sample(hot, 2)
+        b, d = perm[q], perm[q + 6_000]
+        stored.append((q, f"({a} OR {b}) AND {c} -{d}"))
+        want_tree |= {(q, x) for x in ((has(a) | has(b)) & has(c)) - has(d)}
+    for j in range(40):
+        q, pfx, h = 20_000 + j, f"r{j * 3:03d}", rng.choice(hot)
+        stored.append((q, f"{pfx}* AND {h}"))
+        hit = {x for t, ds in docs_with.items() if t.startswith(pfx) for x in ds}
+        want_tree |= {(q, x) for x in hit & has(h)}
+    for j in range(40):
+        q, h = 30_000 + j, rng.choice(hot)
+        lo, hi = f"r{j * 250:05d}", f"r{j * 250 + 60:05d}"
+        stored.append((q, f"[{lo} TO {hi}] AND {h}"))
+        hit = {x for t, ds in docs_with.items() if lo <= t <= hi for x in ds}
+        want_tree |= {(q, x) for x in hit & has(h)}
+    assert len(want_tree) > 100
+
+    def tree_rows(df):
+        return {(r["qid"], r["doc_id"]) for r in df.collect()}
+
+    got = percolate_tree(ddf, stored)
+    assert tree_rows(got) == want_tree
+    no_smj(got)
+    # DataFrame registration past the driver-parse threshold (20k rows):
+    # every query three more times under fresh qids
+    dup = [(q + k * 100_000, s) for k in (1, 2, 3) for q, s in stored]
+    qdf = spark.createDataFrame(stored + dup, "qid int, query string")
+    assert qdf.count() > 20_000
+    want_dup = want_tree | {(q + k * 100_000, x)
+                            for k in (1, 2, 3) for q, x in want_tree}
+    assert tree_rows(percolate_tree(ddf, qdf)) == want_dup
+
+    # --- flat (prefiltered) and full: 12k rows over every rare term;
+    # min_match 0 rows clamp to 1 (a pair sharing no term never matches)
+    flat = []
+    for q in range(12_000):
+        m = (0, 1, 2, 2)[q % 4]
+        terms = rng.sample(hot, 2) + [perm[q]] if m == 2 else [perm[q], perm[-q]]
+        flat.append((q, terms, m, [perm[(q + 7_000) % len(perm)]]))
+
+    def n_of(terms):
+        counts: dict = {}
+        for t in set(terms):
+            for x in has(t):
+                counts[x] = counts.get(x, 0) + 1
+        return counts
+
+    want_flat, want_full = set(), set()
+    for q, terms, m, nots in flat:
+        for x, n in n_of(terms).items():
+            if n >= max(m, 1):
+                want_flat.add((q, x, n))
+                if not any(x in has(t) for t in nots):
+                    want_full.add((q, x, n))
+    assert len(want_full) < len(want_flat)
+
+    fdf = spark.createDataFrame(
+        [(q, t, m) for q, t, m, _ in flat],
+        "qid int, terms array<string>, min_match int",
+    )
+    got = percolate_prefiltered(ddf, fdf)
+    assert {(r["qid"], r["doc_id"], r["n_matched"]) for r in got.collect()} == want_flat
+    no_smj(got)
+    full_schema = ("qid int, terms array<string>, min_match int, "
+                   "not_terms array<string>, phrase array<string>")
+    got = percolate_full(
+        ddf, spark.createDataFrame([r + ([],) for r in flat], full_schema)
+    )
+    assert {(r["qid"], r["doc_id"], r["n_matched"]) for r in got.collect()} == want_full
+    no_smj(got)
+
+    # --- full with 40 distinct phrases (beyond the inline limit: the
+    # position-anchor leg), bigrams lifted from the docs so most match
+    rows, want_ph = [], set()
+    for j, d in enumerate(rng.sample(sorted(texts), 40)):
+        i = rng.randrange(len(texts[d]) - 1)
+        phrase = texts[d][i:i + 2]
+        rows.append((j, phrase + [rng.choice(hot)], 1, [], phrase))
+        for x, n in n_of(rows[-1][1]).items():
+            toks = texts[x]
+            if any(toks[k:k + 2] == phrase for k in range(len(toks) - 1)):
+                want_ph.add((j, x, n))
+    got = percolate_full(ddf, spark.createDataFrame(rows, full_schema))
+    assert {(r["qid"], r["doc_id"], r["n_matched"]) for r in got.collect()} == want_ph
+    assert len(want_ph) >= 40
+
+
 def test_lsh_hot_bucket_guard_star_reduces(spark):
     """VERDICT r5 wrong#4: a degenerate bucket (identical docs) must not
     fan out B^2 pairs in one task. Above the cap the bucket emits a STAR
