@@ -6,10 +6,12 @@ file holds the extra instrumentation the optimization round needs):
   python bench_extra.py percolate [sf_dir]           # isolated percolate timings
   python bench_extra.py micro [sf_dir]               # per-query noop-sink timings
   python bench_extra.py percolate-plans <outdir> <tag> # ingest-shaped percolate plans
+  python bench_extra.py worker-floor                 # fixed cost of one Python task
 
 Timings here isolate single operators (guide §1.4: noop sink / count forced
 outside the sink cost) and label jobs (guide §1.5) so the Spark UI maps
-stages to operators. Env mirrors bench.py: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS.
+stages to operators. Env mirrors bench.py: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS
+(unset: get_spark derives the master from the host).
 """
 
 from __future__ import annotations
@@ -24,8 +26,7 @@ import numpy as np
 def _spark():
     from lucene_spark.session import get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    return get_spark("bench_extra", master=f"local[{cpus}]", shuffle_partitions=cpus)
+    return get_spark("bench_extra")
 
 
 def _noop(df) -> None:
@@ -273,6 +274,45 @@ def cmd_percolate_plans(outdir: str, tag: str) -> None:
     spark.stop()
 
 
+def cmd_worker_floor(reps: int = 40) -> None:
+    """Fixed cost of one Python task, kernel-free: p50 wall time of a
+    one-row no-op mapInArrow job, and the worker CPU each task costs —
+    time.process_time() deltas between consecutive tasks served by the
+    same reused worker (pyspark's per-task setup plus the UDF)."""
+    import json
+    import statistics
+
+    spark = _spark()
+    df = spark.range(1, numPartitions=1)
+
+    def noop(batches):
+        import time as _time
+
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict(
+            {"pid": [os.getpid()], "cpu": [_time.process_time()]}
+        )
+
+    df.mapInArrow(noop, "pid long, cpu double").collect()  # start a worker
+    walls, seen = [], []
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        r = df.mapInArrow(noop, "pid long, cpu double").collect()[0]
+        walls.append((time.perf_counter() - t0) * 1000)
+        seen.append((r["pid"], r["cpu"]))
+    cpu = [(b[1] - a[1]) * 1000 for a, b in zip(seen, seen[1:]) if a[0] == b[0]]
+    print(json.dumps({
+        "job_p50_ms": round(statistics.median(walls), 1),
+        "worker_cpu_ms_per_task_p50": round(statistics.median(cpu), 1) if cpu else None,
+        "reused_pairs": len(cpu),
+        "jobs": reps,
+    }))
+    spark.stop()
+
+
 def cmd_ratio10m() -> None:
     """Decode-ratio rows at a 10M-doc skip index (VERDICT r6 next-round
     #9): same deterministic term-pick recipe as bench.py's 1M section,
@@ -289,7 +329,7 @@ def cmd_ratio10m() -> None:
     from lucene_spark.search.plan import MUST, QBool, QTerm, SHOULD, normalize
 
     spark = _spark()
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = spark.sparkContext.defaultParallelism
     scratch = os.environ.get("BENCH_SCRATCH", "/dev/shm/lucene_spark_bench")
     n = int(os.environ.get("BENCH_RATIO_DOCS", "10000000"))
     corpus = f"{scratch}/corpus_{n}"
@@ -376,6 +416,8 @@ if __name__ == "__main__":
         cmd_ratio10m()
     elif cmd == "percolate-plans":
         cmd_percolate_plans(sys.argv[2], sys.argv[3])
+    elif cmd == "worker-floor":
+        cmd_worker_floor()
     elif cmd == "explains":
         outdir = sys.argv[2] if len(sys.argv) > 2 else "plans/r07"
         cmd_explains(outdir, sf)

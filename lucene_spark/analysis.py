@@ -284,21 +284,6 @@ def analyze_with_offsets(
     return out
 
 
-def analyze_stemmed(text: str, stop_words: frozenset = ENGLISH_STOP_WORDS) -> List[str]:
-    """Query-time EnglishAnalyzer chain incl. the stemming tail (tokenize ->
-    possessive strip -> lowercase -> stop -> Porter) — use for queries
-    against an index built with ``IndexConfig(stemmer='porter')``, passing
-    the result to ``normalize(..., pre_analyzed=True)``."""
-    from .functions.stem import porter_stem, strip_possessive
-
-    out: List[str] = []
-    for tok in tokenize(text):
-        low = strip_possessive(_lower_cp(tok))
-        if low and low not in stop_words:
-            out.append(porter_stem(low))
-    return out
-
-
 def analyze_batch(texts: pd.Series, stop_words: frozenset = ENGLISH_STOP_WORDS) -> pd.Series:
     """Arrow-batch analyze: pd.Series[str] -> pd.Series[list[str]].
 
@@ -498,14 +483,3 @@ def flat_code_tokens(
     if with_positions:
         return codes, docix, vocab, positions
     return codes, docix, vocab
-
-
-def make_analyze_udf(stop_words: frozenset = ENGLISH_STOP_WORDS):
-    """Build the @pandas_udf('array<string>') for the Spark plan."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<string>")
-    def analyze_udf(texts: pd.Series) -> pd.Series:
-        return analyze_batch(texts, stop_words)
-
-    return analyze_udf

@@ -337,15 +337,6 @@ ORDER BY ({score}) DESC, docid ASC LIMIT {k}"""
     )
 
 
-def _qt_values(qtf: Dict[str, float]) -> str:
-    # float weights express query boosts (W = boost * idf is the same shape
-    # as W = qtf * idf); ints keep int formatting for the qtf oracles
-    return ", ".join(
-        f"('{t}', {float(w)!r})" if isinstance(w, float) else f"('{t}', {int(w)})"
-        for t, w in sorted(qtf.items())
-    )
-
-
 def bm25_scored_cte(
     qtf: Dict[str, int], opt_counts: Optional[Dict[str, int]] = None
 ) -> str:

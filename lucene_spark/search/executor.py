@@ -6,8 +6,9 @@ Physical strategy mirrors Lucene's BooleanScorerSupplier choices
   exhaustive path  -> decode postings into a DataFrame, score with Spark SQL
                       (windowed BooleanScorer analog; always correct; used as
                       the oracle and for non-top-k consumers: counts, facets)
-  top-k path       -> per-segment vectorized block-max MAXSCORE/WAND inside
-                      applyInPandas (WANDScorer.java:55, MaxScoreBulkScorer.java:26,
+  top-k path       -> per-segment vectorized block-max MAXSCORE/WAND, one
+                      mapInArrow task per segment file, no shuffle
+                      (WANDScorer.java:55, MaxScoreBulkScorer.java:26,
                       BlockMaxConjunctionBulkScorer.java:36), then a global
                       merge: orderBy(score desc, docid asc).limit(k)
                       == per-leaf collectors + TopDocs.merge
@@ -20,6 +21,7 @@ global top-k, so the merge is exact. Tie-break: score desc, docid asc
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -164,9 +166,10 @@ class Index:
     # like Lucene, deleted docs stop MATCHING immediately but collection
     # statistics keep counting them until segments are purged/merged).
     # Tombstones are PARQUET rows (docid, segment_id) written by Spark jobs
-    # and consumed either cogrouped per segment (pruned top-k paths) or via
-    # a distributed anti-join (exhaustive path) — no query path materializes
-    # the delete set on the driver or ships it inside task closures.
+    # and consumed either by the task that reads their segment (pruned
+    # top-k paths) or via a distributed anti-join (exhaustive path) — no
+    # query path materializes the delete set on the driver or ships it
+    # inside task closures.
 
     def _migrate_legacy_tombstones(self) -> None:
         """v4 -> v5 tombstone migration: pre-v5 indexes stored deletes as
@@ -219,7 +222,8 @@ class Index:
     def deleted(self) -> np.ndarray:
         """Sorted docids of all tombstoned docs — DIAGNOSTIC / small-index
         accessor (tests, purge sanity checks). Query paths never call this;
-        they cogroup or anti-join the tombstone parquet instead."""
+        they read each segment's tombstones in its task or anti-join the
+        tombstone parquet instead."""
         if self._deleted is None:
             if not self.has_deletes:
                 self._deleted = np.empty(0, dtype=np.int64)
@@ -309,26 +313,26 @@ class Index:
     def seg_postings(self) -> DataFrame:
         return self._snap_seg(self.spark.read.parquet(self.paths.postings))
 
-    # skip/impact metadata every per-segment scorer needs; block streams
-    # are requested explicitly so the positions/offsets payloads never
-    # ship through the segment shuffle unless the operator decodes them
-    # (project before the exchange — on a positions+offsets index the
-    # unused streams are most of the row's bytes)
+    def _segment_files(self) -> List[Tuple[int, str]]:
+        """(segment_id, fs-native path) of each postings file this snapshot
+        sees: segments appended after a retained commit drop out by id."""
+        from ..index import fsio
+
+        files = fsio.list_files(self.paths.fs, self.paths.fs_path(self.paths.postings),
+                                prefix="segment-", suffix=".parquet")
+        segs = [(int(os.path.basename(f)[len("segment-"):-len(".parquet")]), f) for f in files]
+        cap = self._snap_max_sid
+        return [(sid, f) for sid, f in segs if cap is None or sid <= cap]
+
+    # skip/impact metadata every per-segment scorer reads; block streams
+    # are requested explicitly so the positions/offsets payloads are never
+    # read unless the operator decodes them (on a positions+offsets index
+    # the unused streams are most of the row's bytes)
     _SCORE_COLS = (
         "term", "segment_id", "df", "first_docid", "last_docid",
         "max_tf", "min_doclen", "block_first", "block_last",
         "block_maxtf", "block_mindl", "block_imp",
     )
-
-    def postings_for(self, terms=None, streams=("block_data",)) -> DataFrame:
-        """Scoring-projected postings rows: skip/impact metadata plus only
-        the requested block streams, filtered to ``terms`` when given."""
-        ps = self.seg_postings
-        cols = [c for c in self._SCORE_COLS if c in ps.columns]
-        cols += [s for s in streams if s in ps.columns and s not in cols]
-        if terms is not None:
-            ps = ps.filter(F.col("term").isin(list(terms)))
-        return ps.select(*cols)
 
     @property
     def term_stats(self) -> DataFrame:
@@ -489,6 +493,14 @@ def _live_mask(ids: np.ndarray, deleted: Optional[np.ndarray]) -> Optional[np.nd
     return deleted[pos] != ids
 
 
+def _no_hits(index: Index, with_metrics: bool = False) -> DataFrame:
+    """The empty top-k result, built only on the paths that return it (each
+    createDataFrame is tens of ms of driver time)."""
+    return index.spark.createDataFrame(
+        [], TOPK_SCHEMA if with_metrics else "docid long, score double"
+    )
+
+
 def _select_topk(ids: np.ndarray, scores, k: Optional[int]):
     """Exact (score desc, docid asc) top-k in O(m): Lucene's collector
     tie-break (TopScoreDocCollector docid-asc on equal score) — a plain
@@ -512,38 +524,73 @@ def _select_topk(ids: np.ndarray, scores, k: Optional[int]):
     return sel_ids[ordr], sel_sc[ordr]
 
 
-def _tomb_arr(pdf: Optional[pd.DataFrame]) -> Optional[np.ndarray]:
-    """Cogrouped tombstone rows -> sorted per-segment delete array."""
-    if pdf is None or len(pdf) == 0:
-        return None
-    return np.unique(pdf["docid"].to_numpy(dtype=np.int64))
+@functools.lru_cache(maxsize=None)
+def _out_schema(schema: str):
+    """(StructType, pyarrow schema) of a UDF result DDL string, parsed once
+    per process instead of once per query."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    return struct, to_arrow_schema(struct)
 
 
-def apply_per_segment(index: Index, rows: DataFrame, fn, schema: str) -> DataFrame:
-    """groupBy(segment_id).applyInPandas with the segment's OWN tombstones
-    cogrouped in when deletes exist — the per-segment liveDocs shape
-    (PendingDeletes.java:31): every task sees only its segment's delete set,
-    nothing is materialized on the driver or captured in closures.
-    Tombstones of segments with no ``rows`` are dropped first: such a
-    segment contributes nothing, and a cogroup whose postings side is
-    empty crashes the Python worker decoding it.
-    ``fn(key, postings_pdf, deleted_or_None) -> pdf``."""
-    if index.has_deletes:
-        segs = F.broadcast(rows.select("segment_id").distinct())
-        tomb = index.tombstones.join(segs, "segment_id", "left_semi")
-        return (
-            rows.groupBy("segment_id")
-            .cogroup(tomb.groupBy("segment_id"))
-            .applyInPandas(lambda key, pdf, tomb: fn(key, pdf, _tomb_arr(tomb)), schema)
-        )
-    return rows.groupBy("segment_id").applyInPandas(
-        lambda key, pdf: fn(key, pdf, None), schema
+def apply_per_segment(index: Index, terms, fn, schema: str,
+                      streams=("block_data",)) -> DataFrame:
+    """Run ``fn(key, postings_pdf, deleted_or_None) -> pdf`` once per
+    segment holding any of ``terms`` (searchLeaf per leaf,
+    IndexSearcher.java:760 slices): one task per live segment file, or per
+    slice of files once there are more segments than defaultParallelism.
+    Each task seeks its own term-sorted postings file with the pyarrow
+    row-group filter on ``term`` (projected to the scoring metadata plus
+    ``streams``) and reads only its segment's tombstones — the per-segment
+    liveDocs shape (PendingDeletes.java:31). The plan is a range over the
+    driver-listed files feeding one mapInArrow stage: no shuffle, no sort,
+    and no delete set on the driver or in the closure."""
+    from ..index import fsio
+
+    paths, spark = index.paths, index.spark
+    segs = index._segment_files()
+    tombs = (
+        fsio.list_files(paths.fs, paths.fs_path(paths.tombstones), suffix=".parquet")
+        if index.has_deletes else []
     )
+    terms = sorted(set(terms))
+    cols = list(Index._SCORE_COLS) + [s for s in streams if s not in Index._SCORE_COLS]
+    struct, out_schema = _out_schema(schema)
+
+    def per_segment(batches):
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        fs = paths.fs
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                sid, path = segs[i]
+                data = ds.dataset(path, filesystem=fs, format="parquet")
+                tbl = data.to_table(
+                    columns=[c for c in cols if c in data.schema.names],
+                    filter=ds.field("term").isin(terms), use_threads=False,
+                )
+                if tbl.num_rows == 0:
+                    continue
+                deleted = None
+                if tombs:
+                    dead = ds.dataset(tombs, filesystem=fs, format="parquet").to_table(
+                        columns=["docid"], filter=ds.field("segment_id") == sid,
+                        use_threads=False,
+                    )
+                    if dead.num_rows:
+                        deleted = np.unique(dead["docid"].to_numpy().astype(np.int64))
+                out = fn((sid,), tbl.to_pandas(), deleted)
+                yield pa.RecordBatch.from_pandas(out, schema=out_schema, preserve_index=False)
+
+    slices = max(1, min(len(segs), spark.sparkContext.defaultParallelism))
+    return spark.range(len(segs), numPartitions=slices).mapInArrow(per_segment, struct)
 
 
 def decoded_postings(
-    index: Index, terms: Sequence[str], use_segments: bool = False,
-    apply_deletes: bool = True,
+    index: Index, terms: Sequence[str], apply_deletes: bool = True,
 ) -> DataFrame:
     """(term, docid, tf, doclen) LIVE rows for the given terms, decoded from
     block binaries in mapInPandas (Arrow batches, numpy decode); tombstoned
@@ -555,7 +602,7 @@ def decoded_postings(
     ranges) never materialize the term list on the driver; ``terms=None``
     decodes EVERY term (full-scan consumers like check_index — no broadcast
     of the whole vocabulary)."""
-    src = index.seg_postings if use_segments else index.merged
+    src = index.merged
     if terms is None:
         rows = src.select("term", "block_data")
     elif isinstance(terms, DataFrame):
@@ -619,7 +666,7 @@ def search_exhaustive(
 
     spark = index.spark
     if q.is_match_none:
-        return spark.createDataFrame([], "docid long, score double")
+        return _no_hits(index)
     sim = bind_similarity(
         similarity, q.scoring_terms, index.term_stats_for(list(q.scoring_terms)),
         index.field_stats, boost, quantize, dtype,
@@ -628,7 +675,7 @@ def search_exhaustive(
     req = [t for t, _ in q.required]
     live_terms = [t for t in q.scoring_terms if t in weights]
     if not live_terms or any(t not in weights for t in req):
-        return spark.createDataFrame([], "docid long, score double")
+        return _no_hits(index)
 
     dec = decoded_postings(index, live_terms)
     if quantize:
@@ -644,7 +691,7 @@ def search_exhaustive(
     # qtf; 0 for pure-MUST terms) — matching the un-merged clause count
     opt_counts = dict(q.optional)
     if q.min_should_match > sum(opt_counts.get(t, 0) for t in weights):
-        return spark.createDataFrame([], "docid long, score double")
+        return _no_hits(index)
     wrows = sim.wdf_rows() if sim is not None else [
         (t, float(w), 0.0) for t, w in weights.items()
     ]
@@ -769,7 +816,7 @@ def make_topk_fn(
 
     def run(pdf: pd.DataFrame, deleted: Optional[np.ndarray]):
         """Core per-segment scorer -> (docids, scores, counters);
-        ``deleted`` is this segment's cogrouped tombstone array."""
+        ``deleted`` is this segment's tombstone array."""
         counters = [0, 0]  # blocks_total, blocks_decoded
         rows = {}
         for r in pdf.to_dict("records"):  # dicts, not iterrows Series
@@ -1157,14 +1204,12 @@ def search_topk(
         quantize = not getattr(q, "tree_origin", False)
     if dtype is None:
         dtype = np.float64 if getattr(q, "tree_origin", False) else np.float32
-    spark = index.spark
-    empty = spark.createDataFrame([], TOPK_SCHEMA if with_metrics else "docid long, score double")
     if q.is_match_none:
-        return empty
+        return _no_hits(index, with_metrics)
     plan = _topk_plan(index, q, boost, dtype, similarity, quantize)
     if plan is None:
-        return empty
-    weights, req, rows, sim = plan
+        return _no_hits(index, with_metrics)
+    weights, req, terms, sim = plan
     if theta_seed == 0.0:
         theta_seed = auto_seed_theta(index, q, weights, sim, k, quantize, dtype)
     fn = make_topk_fn(
@@ -1172,7 +1217,7 @@ def search_topk(
         quantize, dtype, opt_counts=dict(q.optional), msm=q.min_should_match,
         theta_seed=theta_seed, sim=sim,
     )
-    per_seg = apply_per_segment(index, rows, fn, TOPK_SCHEMA)
+    per_seg = apply_per_segment(index, terms, fn, TOPK_SCHEMA)
     out = per_seg.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
     return out if with_metrics else out.select("docid", "score")
 
@@ -1181,8 +1226,8 @@ def _topk_plan(index: Index, q: NormalizedQuery, boost: float, dtype,
                similarity: Optional[str] = None, quantize: bool = True):
     """Shared setup for the per-segment top-k paths: resolve term weights
     (through the pluggable similarity when one is named — Similarity seam,
-    SURVEY.md §2.4) and the filtered postings rows; None when the query
-    cannot match."""
+    SURVEY.md §2.4) and the terms whose postings the segments read; None
+    when the query cannot match."""
     from .similarities import bind_similarity
 
     sim = bind_similarity(
@@ -1195,9 +1240,7 @@ def _topk_plan(index: Index, q: NormalizedQuery, boost: float, dtype,
         return None
     if q.min_should_match > sum(c for t, c in q.optional if t in weights):
         return None  # terms absent from the index can never credit msm
-    all_terms = sorted(set(weights) | set(q.excluded))
-    rows = index.postings_for(all_terms)
-    return weights, req, rows, sim
+    return weights, req, sorted(set(weights) | set(q.excluded)), sim
 
 
 # largest posting list the auto seed will decode on the driver: bounded
@@ -1215,11 +1258,7 @@ def _driver_term_postings(index: Index, term: str):
     try:
         import pyarrow.parquet as pq
 
-        from ..index import fsio
-
-        files = fsio.list_files(
-            index.paths.fs, index.paths.fs_path(index.paths.postings), suffix=".parquet"
-        )
+        files = [f for _, f in index._segment_files()]
         tbl = pq.ParquetDataset(
             files, filesystem=index.paths.fs, filters=[("term", "==", term)]
         ).read(columns=["block_data"])
@@ -1368,6 +1407,15 @@ def seed_theta(
     return float(rows[-1]["score"]) * PRUNE_SCALE[dtype]
 
 
+def _skip_counters(index: Index, terms, metrics_fn) -> dict:
+    """Decode counters summed on the driver over the one row per segment
+    ``metrics_fn`` emits (no aggregation shuffle after the segment stage)."""
+    rows = apply_per_segment(index, terms, metrics_fn, METRICS_SCHEMA).collect()
+    tot = sum(r["blocks_total"] for r in rows)
+    dec = sum(r["blocks_decoded"] for r in rows)
+    return {"blocks_total": tot, "blocks_decoded": dec, "ratio": (dec / tot) if tot else None}
+
+
 def block_skip_metrics(
     index: Index,
     q: NormalizedQuery,
@@ -1386,7 +1434,7 @@ def block_skip_metrics(
     plan = _topk_plan(index, q, boost, dtype, similarity, quantize)
     if plan is None:
         return {"blocks_total": 0, "blocks_decoded": 0, "ratio": None}
-    weights, req, rows, sim = plan
+    weights, req, terms, sim = plan
     if theta_seed == 0.0:
         # mirror search_topk's default plan so the reported ratio is what
         # a default call actually decodes
@@ -1396,16 +1444,7 @@ def block_skip_metrics(
         quantize, dtype, opt_counts=dict(q.optional), msm=q.min_should_match,
         theta_seed=theta_seed, sim=sim,
     )
-    per_seg = apply_per_segment(index, rows, fn.metrics_fn, METRICS_SCHEMA)
-    row = per_seg.agg(
-        F.sum("blocks_total").alias("t"), F.sum("blocks_decoded").alias("d")
-    ).collect()[0]
-    tot, dec = int(row["t"] or 0), int(row["d"] or 0)
-    return {
-        "blocks_total": tot,
-        "blocks_decoded": dec,
-        "ratio": (dec / tot) if tot else None,
-    }
+    return _skip_counters(index, terms, fn.metrics_fn)
 
 
 # ---------------------------------------------------------------------------
@@ -1531,9 +1570,9 @@ def term_offsets_for_docs(index: Index, terms, docids: np.ndarray) -> DataFrame:
             }
         )
 
-    rows = index.postings_for(terms, streams=("block_data", "block_off"))
     return apply_per_segment(
-        index, rows, fn, "docid long, term string, start int, end int"
+        index, terms, fn, "docid long, term string, start int, end int",
+        streams=("block_data", "block_off"),
     )
 
 
@@ -1796,7 +1835,7 @@ def search_phrase(
     per_seg = _phrase_per_seg(index, phrase, slop, k, boost, quantize, dtype,
                               stop_words, similarity)
     if per_seg is None:
-        return index.spark.createDataFrame([], "docid long, score double")
+        return _no_hits(index)
     return (
         per_seg.orderBy(F.col("score").desc(), F.col("docid").asc())
         .limit(k)
@@ -1819,7 +1858,7 @@ def phrase_scores(
     per_seg = _phrase_per_seg(index, phrase, slop, None, boost, quantize, dtype,
                               stop_words, similarity)
     if per_seg is None:
-        return index.spark.createDataFrame([], "docid long, score double")
+        return _no_hits(index)
     return per_seg.select("docid", "score")
 
 
@@ -1849,12 +1888,12 @@ def _phrase_per_seg(index, phrase, slop, k, boost, quantize, dtype, stop_words,
         similarity, dict(Counter(t for t, _ in terms_off)), stats,
         index.field_stats, boost, quantize, dtype,
     )
-    rows = index.postings_for(distinct, streams=("block_data", "block_pos"))
     fn = make_phrase_topk_fn(
         terms_off, w, k, slop, float(index.field_stats.avgdl()), quantize, dtype,
         sim=sim,
     )
-    return apply_per_segment(index, rows, fn, TOPK_SCHEMA)
+    return apply_per_segment(index, distinct, fn, TOPK_SCHEMA,
+                             streams=("block_data", "block_pos"))
 
 
 def make_multiphrase_fn(
@@ -2136,7 +2175,7 @@ def search_phrase_wildcard(
             else:
                 terms = index.expand_terms(prefix=word[:-1], max_terms=max_expansions)
             if not terms:
-                return index.spark.createDataFrame([], "docid long, score double")
+                return _no_hits(index)
             slots.append((off, sorted(terms)))
         else:
             slots.append((off, [word]))
@@ -2165,10 +2204,8 @@ def search_multi_phrase(
     from .similarities import bind_similarity
 
     require_positions(index, "MultiPhraseQuery")
-    spark = index.spark
-    empty = spark.createDataFrame([], "docid long, score double")
     if not slots:
-        return empty
+        return _no_hits(index)
     base_off = int(slots[0][0])
     # terms repeating across slots are handled by the rptGroups machinery
     # inside the matcher (union-find groups + multi-term init/advance,
@@ -2180,7 +2217,7 @@ def search_multi_phrase(
     for off, alts in norm_slots:
         live = tuple(t for t in alts if t in stats)
         if not live:
-            return empty  # a slot with no existing alternative can't match
+            return _no_hits(index)  # a slot with no live alternative can't match
         live_slots.append((off, live))
     n = index.field_stats.doc_count
     w = float(
@@ -2192,12 +2229,12 @@ def search_multi_phrase(
         index.field_stats, boost, quantize, dtype,
     )
     distinct = sorted({t for _, a in live_slots for t in a})
-    rows = index.postings_for(distinct, streams=("block_data", "block_pos"))
     fn = make_multiphrase_fn(
         live_slots, w, k, slop, float(index.field_stats.avgdl()), quantize, dtype,
         sim=sim,
     )
-    per_seg = apply_per_segment(index, rows, fn, TOPK_SCHEMA)
+    per_seg = apply_per_segment(index, distinct, fn, TOPK_SCHEMA,
+                                streams=("block_data", "block_pos"))
     return (
         per_seg.orderBy(F.col("score").desc(), F.col("docid").asc())
         .limit(k)
@@ -2218,11 +2255,10 @@ def blended_term_topk(
     (BlendedTermQuery.java:281-282) — then combined by the default
     DisjunctionMax rewrite with tieBreaker 0.01
     (DISJUNCTION_MAX_REWRITE): score = max(sub) + tie * Σ(other subs)."""
-    spark = index.spark
     stats = index.term_stats_for(list(terms))
     live = sorted(t for t in set(terms) if t in stats)
     if not live:
-        return spark.createDataFrame([], "docid long, score double")
+        return _no_hits(index)
     n = index.field_stats.doc_count
     df_blend = max(stats[t][0] for t in live)
     from .scorer import idf as _idf
@@ -2256,13 +2292,12 @@ def dismax_topk(
     matching clauses' scores (tieBreakerMultiplier). Each clause is a full
     NormalizedQuery evaluated by the exhaustive JVM path; the combine is
     one union + groupBy — no driver loop over docs."""
-    spark = index.spark
     scored = None
     for q in clauses:
         part = search_exhaustive(index, q, k=None, **kw)
         scored = part if scored is None else scored.unionByName(part)
     if scored is None:
-        return spark.createDataFrame([], "docid long, score double")
+        return _no_hits(index)
     per_doc = scored.groupBy("docid").agg(
         F.max("score").alias("mx"), F.sum("score").alias("sm")
     )
@@ -2546,7 +2581,7 @@ def search_tree(
     phrases score via the MultiSimScorer-sum analog)."""
     df = _eval_node(index, node, quantize, dtype, similarity)
     if df is None:
-        return index.spark.createDataFrame([], "docid long, score double")
+        return _no_hits(index)
     df = df.orderBy(F.col("score").desc(), F.col("docid").asc())
     return df.limit(k) if k else df
 
@@ -3118,8 +3153,8 @@ def _mixed_plan(index: Index, node, quantize: bool, dtype,
                 similarity: Optional[str]):
     """Shared setup for the mixed-disjunction pruned paths: shape check,
     weight/similarity resolution, dead-clause elimination. None when the
-    tree is not the supported shape; (clauses, excl, weights, sim, rows)
-    when it is ((clauses=[] means provably MatchNone))."""
+    tree is not the supported shape; (clauses, excl, msm, weights, sim,
+    terms) when it is ((clauses=[] means provably MatchNone))."""
     from .plan import mixed_or_clauses
     from .similarities import bind_similarity
 
@@ -3137,9 +3172,7 @@ def _mixed_plan(index: Index, node, quantize: bool, dtype,
     live = [c for c in clauses if all(t in weights for t in c)]
     if msm > len(live):
         msm = -1  # clauses on unindexed terms can never credit msm
-    all_terms = sorted({t for c in live for t in c} | set(excl))
-    rows = index.postings_for(all_terms)
-    return live, excl, msm, weights, sim, rows
+    return live, excl, msm, weights, sim, sorted({t for c in live for t in c} | set(excl))
 
 
 def seed_theta_tree(
@@ -3160,7 +3193,7 @@ def seed_theta_tree(
     plan = _mixed_plan(index, node, quantize, dtype, similarity)
     if plan is None:
         return 0.0
-    live, excl, msm, weights, sim, _rows = plan
+    live, excl, msm, weights, sim, _terms = plan
     if not live or msm != 0 or excl or index.has_deletes:
         return 0.0
     stats = index.term_stats_for(sorted({t for c in live for t in c}))
@@ -3170,12 +3203,11 @@ def seed_theta_tree(
 
     cheapest = min(live, key=lead_df)
     terms = sorted(cheapest)
-    rows = index.postings_for(terms)
     fn = make_mixed_topk_fn(
         [cheapest], [], k, float(index.field_stats.avgdl()), quantize, dtype,
         sim=sim, weights=weights,
     )
-    per_seg = apply_per_segment(index, rows, fn, TOPK_SCHEMA)
+    per_seg = apply_per_segment(index, terms, fn, TOPK_SCHEMA)
     out = per_seg.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
     vals = out.select("score").collect()
     if len(vals) < k:
@@ -3204,13 +3236,9 @@ def search_tree_topk(
     plan = _mixed_plan(index, node, quantize, dtype, similarity)
     if plan is None:
         return None
-    spark = index.spark
-    empty = spark.createDataFrame(
-        [], TOPK_SCHEMA if with_metrics else "docid long, score double"
-    )
-    live, excl, msm, weights, sim, rows = plan
+    live, excl, msm, weights, sim, terms = plan
     if not live or msm < 0:
-        return empty
+        return _no_hits(index, with_metrics)
     if theta_seed == 0.0 and msm == 0:
         # msm restricts the qualifying set below any term clause's df, so
         # the stats-based seed is unsound there (same rule as the flat path)
@@ -3221,7 +3249,7 @@ def search_tree_topk(
         live, excl, k, float(index.field_stats.avgdl()), quantize, dtype,
         theta_seed=theta_seed, sim=sim, weights=weights, msm=msm,
     )
-    per_seg = apply_per_segment(index, rows, fn, TOPK_SCHEMA)
+    per_seg = apply_per_segment(index, terms, fn, TOPK_SCHEMA)
     out = per_seg.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
     return out if with_metrics else out.select("docid", "score")
 
@@ -3242,18 +3270,16 @@ def search_tree_after(
     past-cursor partials stop decoding); any other tree shape falls back
     to the exhaustive evaluation filtered by the cursor."""
     plan = _mixed_plan(index, node, quantize, dtype, similarity)
-    spark = index.spark
-    empty = spark.createDataFrame([], "docid long, score double")
     if plan is not None:
-        live, excl, msm, weights, sim, rows = plan
+        live, excl, msm, weights, sim, terms = plan
         if not live or msm < 0:
-            return empty
+            return _no_hits(index)
         fn = make_mixed_topk_fn(
             live, excl, k, float(index.field_stats.avgdl()), quantize, dtype,
             sim=sim, weights=weights, msm=msm,
             cursor=(float(after_score), int(after_docid)),
         )
-        per_seg = apply_per_segment(index, rows, fn, TOPK_SCHEMA)
+        per_seg = apply_per_segment(index, terms, fn, TOPK_SCHEMA)
         return (
             per_seg.orderBy(F.col("score").desc(), F.col("docid").asc())
             .limit(k).select("docid", "score")
@@ -3284,7 +3310,7 @@ def tree_skip_metrics(
     plan = _mixed_plan(index, node, quantize, dtype, similarity)
     if plan is None:
         return {"blocks_total": 0, "blocks_decoded": 0, "ratio": None}
-    live, excl, msm, weights, sim, rows = plan
+    live, excl, msm, weights, sim, terms = plan
     if not live or msm < 0:
         return {"blocks_total": 0, "blocks_decoded": 0, "ratio": None}
     if theta_seed == 0.0 and msm == 0:
@@ -3295,16 +3321,7 @@ def tree_skip_metrics(
         live, excl, k, float(index.field_stats.avgdl()), quantize, dtype,
         theta_seed=theta_seed, sim=sim, weights=weights, msm=msm,
     )
-    per_seg = apply_per_segment(index, rows, fn.metrics_fn, METRICS_SCHEMA)
-    row = per_seg.agg(
-        F.sum("blocks_total").alias("t"), F.sum("blocks_decoded").alias("d")
-    ).collect()[0]
-    tot, dec = int(row["t"] or 0), int(row["d"] or 0)
-    return {
-        "blocks_total": tot,
-        "blocks_decoded": dec,
-        "ratio": (dec / tot) if tot else None,
-    }
+    return _skip_counters(index, terms, fn.metrics_fn)
 
 
 def search_query(index: Index, q, k: int = 10, **kw) -> DataFrame:
@@ -3350,38 +3367,20 @@ def search_after(
     quantize = kw.pop("quantize", True)
     dtype = kw.pop("dtype", np.float32)
     boost = kw.pop("boost", 1.0)
-    spark = index.spark
-    empty = spark.createDataFrame([], "docid long, score double")
     if q.is_match_none:
-        return empty
+        return _no_hits(index)
     plan = _topk_plan(index, q, boost, dtype, kw.pop("similarity", None), quantize)
     if plan is None:
-        return empty
-    weights, req, rows, sim = plan
+        return _no_hits(index)
+    weights, req, terms, sim = plan
     fn = make_topk_fn(
         weights, req, list(q.excluded), k, float(index.field_stats.avgdl()),
         quantize, dtype, cursor=(float(after_score), int(after_docid)),
         opt_counts=dict(q.optional), msm=q.min_should_match, sim=sim,
     )
-    per_seg = apply_per_segment(index, rows, fn, TOPK_SCHEMA)
+    per_seg = apply_per_segment(index, terms, fn, TOPK_SCHEMA)
     return (
         per_seg.orderBy(F.col("score").desc(), F.col("docid").asc())
         .limit(k)
         .select("docid", "score")
     )
-
-
-def search_after_exhaustive(
-    index: Index,
-    q: NormalizedQuery,
-    k: int,
-    after_score: float,
-    after_docid: int,
-    **kw,
-) -> DataFrame:
-    """Exhaustive cursor pagination (differential oracle for search_after)."""
-    full = search_exhaustive(index, q, k=None, **kw)
-    cond = (F.col("score") < after_score) | (
-        (F.col("score") == after_score) & (F.col("docid") > after_docid)
-    )
-    return full.filter(cond).orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)

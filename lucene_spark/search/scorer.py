@@ -91,15 +91,3 @@ def term_weights(
             continue
         out[t] = float(dtype(boost) * dtype(q) * idf(df, doc_count, dtype))
     return out
-
-
-def max_term_score(weight, max_tf: int, min_doclen: int, avgdl: float,
-                   quantize: bool = True, dtype=np.float32) -> float:
-    """Sound per-term/per-block score upper bound: score is monotone up in
-    tf and down in doclen, so score(max_tf, min_doclen) bounds every
-    posting (ImpactsDISI/MaxScoreCache analog, MaxScoreCache.java:74-130)."""
-    return float(
-        score_arrays(
-            np.array([max_tf]), np.array([min_doclen]), weight, avgdl, quantize, dtype
-        )[0]
-    )

@@ -50,9 +50,11 @@ def get_spark(app: str = "lucene_spark", master: str | None = None,
     # would oversubscribe (n_workers x n_threads)
     os.environ.setdefault("OMP_NUM_THREADS", "1")
     os.environ.setdefault("OPENBLAS_NUM_THREADS", "1")
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-    cores = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
-    n = int(cores) if cores.isdigit() else os.cpu_count() or 8
+    host = (len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity")
+            else os.cpu_count() or 8)
+    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', host)}]"
+    cores = master[master.find("[") + 1 : master.find("]")] if "[" in master else ""
+    n = int(cores) if cores.isdigit() else host
     builder = (
         SparkSession.builder.master(master)
         .appName(app)
@@ -76,6 +78,9 @@ def get_spark(app: str = "lucene_spark", master: str | None = None,
         # NVMe on a real cluster). Override with SPARK_GRAFT_LOCAL_DIR.
         .config("spark.local.dir", os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-tmp"))
         .config("spark.ui.enabled", "false")
+        # workers fork from lucene_spark._daemon: pyspark's daemon minus the
+        # per-task re-read of every zip archive on sys.path
+        .config("spark.python.daemon.module", "lucene_spark._daemon")
     )
     # s3mock:// scheme for the cluster-shaped smoke test: Spark serves the
     # scheme via a RawLocalFileSystem subclass (tiny committed jar); the
